@@ -6,12 +6,16 @@ The reference materializes the session result set, then streams it to the
 client as packets of at most ``MAX_PACKET_LEN`` bytes (conf default 4 MB):
 nrows, nfields, then per-cell ``len`` + bytes with numbers stringified.
 
-Spark-first re-expression: rows come off ``toLocalIterator()`` (one partition
-at a time crosses the driver — the fetch is O(packet) memory, never a full
-``collect()``), cells are encoded the same way (numbers stringified, arrays
-as packed little-endian float64 — the reference's binary ``measure`` blob),
-and packets are framed at ``max_packet_len``.  ``deserialize_packets`` is the
-client side; round-tripping is exercised in tests.
+Spark-first re-expression: the result set is materialised once, in the JVM
+driver, by ONE Spark job (``collectToPython`` — the reference's session
+result set), bounded by ``spark.driver.maxResultSize``; an over-limit result
+fails before the first packet, so the server turns it into a clean ``E``.
+Python then reads it lazily off the local socket, holding one pickle batch
+plus one packet — never the whole result as a Python list.  Cells are
+encoded the same way (numbers stringified, arrays as packed little-endian
+float64 — the reference's binary ``measure`` blob), and packets are framed at
+``max_packet_len``.  ``deserialize_packets`` is the client side;
+round-tripping is exercised in tests.
 
 Framing (per packet): 4-byte big-endian row count, then rows; each row:
 4-byte cell count, then cells; each cell: 1-byte type tag (L/D/S/B/N),
@@ -24,7 +28,9 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
+from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame
+from pyspark.util import _create_local_socket
 
 MAX_PACKET_LEN = 4_000_000  # etc/oph_ioserver.conf:5
 FLOAT_FMT = "%.12g"         # reference stringifies doubles with %.*f
@@ -50,7 +56,11 @@ def _encode_cell(v) -> bytes:
 
 def serialize_result_set(df: DataFrame, max_packet_len: int = MAX_PACKET_LEN
                          ) -> Iterator[bytes]:
-    """Yield framed packets for a result DataFrame (streamed, not collected)."""
+    """Yield framed packets for a result DataFrame.
+
+    The Spark job runs when the first packet is pulled: one job for the
+    whole result (``DataFrame.collect`` without its ``list``), not one job
+    per partition as a local iterator would run."""
     nfields = len(df.columns)
     header = struct.pack(">ii", nfields, 0)
     first = True
@@ -66,14 +76,17 @@ def serialize_result_set(df: DataFrame, max_packet_len: int = MAX_PACKET_LEN
         buf, buf_len, nrows = [], 0, 0
         return out
 
-    for row in df.toLocalIterator():
-        cells = b"".join(_encode_cell(v) for v in row)
-        rec = struct.pack(">i", len(row)) + cells
-        if buf and buf_len + len(rec) > max_packet_len:
-            yield flush()
-        buf.append(rec)
-        buf_len += len(rec)
-        nrows += 1
+    # closed on exhaustion or when the consumer drops the generator (client
+    # gone mid-stream), which ends the JVM thread serving the result
+    with _create_local_socket(df._jdf.collectToPython()) as sockfile:
+        for row in BatchedSerializer(CPickleSerializer()).load_stream(sockfile):
+            cells = b"".join(_encode_cell(v) for v in row)
+            rec = struct.pack(">i", len(row)) + cells
+            if buf and buf_len + len(rec) > max_packet_len:
+                yield flush()
+            buf.append(rec)
+            buf_len += len(rec)
+            nrows += 1
     yield flush()
     yield struct.pack(">i", 0)  # terminator
 

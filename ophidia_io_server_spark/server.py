@@ -15,12 +15,20 @@ with a result set, the RS packet stream (terminated by its zero-row packet),
 for ok without result an empty RS stream, and for errors a 4-byte length +
 UTF-8 message.  ``QUIT`` closes the connection.
 
-Error contract: analysis errors and runtime errors that surface while
-producing the FIRST packet become clean ``E`` frames.  Because packets then
-stream one at a time (O(packet) driver memory), a Spark failure after ``K``
-has been sent cannot be reframed — the connection is closed mid-stream, and
-clients must treat a truncated RS stream as a query failure, exactly as with
-the reference's chunked send loop.
+Error contract: the handler pulls the first packet before it sends ``K``,
+and pulling it runs the query's single Spark job to completion (the result
+set is materialised once in the JVM driver, bounded by
+``spark.driver.maxResultSize``).  So analysis errors, runtime errors in any
+partition and an over-limit result all become clean ``E`` frames, and the
+connection stays usable.  Only a failure while sending the remaining packets
+(e.g. the client went away) closes the connection mid-stream; clients treat
+a truncated RS stream as a query failure, as with the reference's chunked
+send loop.
+
+Each request's Spark jobs run under the job group ``oph-io:<peer port>:<n>``
+(``n`` counts the connection's requests from 1), described by the first 120
+characters of the query, so they can be found through the status tracker
+and the Spark UI.
 
 This is a developer/parity façade: production deployments should front Spark
 with Spark Connect / Livy-style services instead of a hand-rolled socket
@@ -33,35 +41,43 @@ import socket
 import socketserver
 import struct
 import threading
+from typing import BinaryIO
 
 from pyspark.sql import SparkSession
 
 from ophidia_io_server_spark.operators.engine import IOServer
-from ophidia_io_server_spark.protocol import serialize_result_set
+from ophidia_io_server_spark.protocol import deserialize_packets, serialize_result_set
 
 
-def _recv_exact(sock: socket.socket, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            raise ConnectionError("peer closed")
-        buf += chunk
+def _read_exact(rfile: BinaryIO, n: int) -> bytes:
+    """Exactly ``n`` bytes from a buffered socket file: ``read(n)`` fills one
+    preallocated buffer, so small reads cost no ``recv`` each and a large
+    frame is not rebuilt by repeated concatenation."""
+    buf = rfile.read(n)
+    if len(buf) < n:
+        raise ConnectionError("peer closed")
     return buf
 
 
-class _Handler(socketserver.BaseRequestHandler):
+class _Handler(socketserver.StreamRequestHandler):
     def handle(self) -> None:
         srv: IOServer = self.server.io_server  # type: ignore[attr-defined]
         lock: threading.Lock = self.server.catalog_lock  # type: ignore[attr-defined]
+        sc = srv.spark.sparkContext
+        peer_port = self.client_address[1]
+        n = 0
         while True:
             try:
-                (ln,) = struct.unpack(">i", _recv_exact(self.request, 4))
-                query = _recv_exact(self.request, ln).decode()
+                (ln,) = struct.unpack(">i", _read_exact(self.rfile, 4))
+                query = _read_exact(self.rfile, ln).decode()
             except (ConnectionError, struct.error):
                 return
             if query.strip().upper() == "QUIT":
                 return
+            n += 1
+            # handler threads are pinned to their own JVM threads, so the
+            # group tags exactly this request's jobs
+            sc.setJobGroup(f"oph-io:{peer_port}:{n}", query[:120])
             try:
                 params = self._read_binds()
                 # catalog mutations are driver-side dict ops — serialize them
@@ -69,13 +85,13 @@ class _Handler(socketserver.BaseRequestHandler):
                 # thread-safe and run outside the lock via the returned plan
                 with lock:
                     df = srv.execute(query, params=params)
-                # materialize only the FIRST packet before emitting the 'K'
-                # status byte: pulling it forces plan execution, so analysis
-                # and early runtime errors surface here and become a clean
-                # 'E' frame.  The rest streams one packet at a time off
-                # toLocalIterator — O(packet) driver memory, the reference's
-                # 4 MB chunking contract (MAX_PACKET_LEN,
-                # etc/oph_ioserver.conf:5) — never a full driver buffer.
+                # pull the FIRST packet before emitting the 'K' status byte:
+                # pulling it runs the whole Spark job (the result set is held
+                # once in the JVM driver, bounded by maxResultSize), so every
+                # analysis, runtime or over-limit error surfaces here and
+                # becomes a clean 'E' frame.  The rest streams one packet at
+                # a time — the reference's 4 MB chunking contract
+                # (MAX_PACKET_LEN, etc/oph_ioserver.conf:5).
                 if df is not None:
                     pkt_iter = serialize_result_set(df)
                 else:
@@ -90,9 +106,10 @@ class _Handler(socketserver.BaseRequestHandler):
                 for pkt in pkt_iter:
                     self.request.sendall(pkt)
             except Exception:  # noqa: BLE001
-                # a failure after 'K' cannot become an 'E' frame (the client
-                # is mid-RS-parse) — it is a connection-level error, exactly
-                # as in the reference's chunked send loop
+                # Spark work is done by now; what fails here is the send
+                # itself.  A failure after 'K' cannot become an 'E' frame
+                # (the client is mid-RS-parse) — it is a connection-level
+                # error, as in the reference's chunked send loop
                 self.request.close()
                 return
 
@@ -102,17 +119,17 @@ class _Handler(socketserver.BaseRequestHandler):
         message's DL/DD/DV/DB sub-headers): 4-byte count, then per bind a
         1-byte tag + payload (L: 8-byte long; D: 8-byte double; S/B: 4-byte
         length + bytes; B decodes to a list of little-endian float64)."""
-        (nbinds,) = struct.unpack(">i", _recv_exact(self.request, 4))
+        (nbinds,) = struct.unpack(">i", _read_exact(self.rfile, 4))
         params: dict[int, object] = {}
         for i in range(1, nbinds + 1):
-            tag = _recv_exact(self.request, 1)
+            tag = _read_exact(self.rfile, 1)
             if tag == b"L":
-                (params[i],) = struct.unpack(">q", _recv_exact(self.request, 8))
+                (params[i],) = struct.unpack(">q", _read_exact(self.rfile, 8))
             elif tag == b"D":
-                (params[i],) = struct.unpack(">d", _recv_exact(self.request, 8))
+                (params[i],) = struct.unpack(">d", _read_exact(self.rfile, 8))
             elif tag in (b"S", b"B"):
-                (ln,) = struct.unpack(">i", _recv_exact(self.request, 4))
-                raw = _recv_exact(self.request, ln)
+                (ln,) = struct.unpack(">i", _read_exact(self.rfile, 4))
+                raw = _read_exact(self.rfile, ln)
                 params[i] = (list(struct.unpack(f"<{ln // 8}d", raw))
                              if tag == b"B" else raw.decode())
             else:
@@ -147,6 +164,7 @@ class QueryClient:
 
     def __init__(self, host: str, port: int):
         self.sock = socket.create_connection((host, port))
+        self._rfile = self.sock.makefile("rb")
 
     def execute(self, query: str, params: dict[int, object] | None = None):
         q = query.encode()
@@ -166,40 +184,34 @@ class QueryClient:
                 raw = str(v).encode()
                 frames.append(b"S" + struct.pack(">i", len(raw)) + raw)
         self.sock.sendall(b"".join(frames))
-        status = _recv_exact(self.sock, 1)
+        rf = self._rfile
+        status = _read_exact(rf, 1)
         if status == b"E":
-            (ln,) = struct.unpack(">i", _recv_exact(self.sock, 4))
-            raise RuntimeError(_recv_exact(self.sock, ln).decode())
-        # read RS stream: header, then packets until the zero-row terminator
-        header = _recv_exact(self.sock, 8)
-        (nfields, _) = struct.unpack(">ii", header)
-        raw = [header]
+            (ln,) = struct.unpack(">i", _read_exact(rf, 4))
+            raise RuntimeError(_read_exact(rf, ln).decode())
+        # read RS stream: header, then packets until the zero-row terminator.
+        # Rows are length-framed cell by cell, so walk the cells; the reads
+        # come out of the file's buffer, not one recv per cell.
+        parts = [_read_exact(rf, 8)]
         while True:
-            count_b = _recv_exact(self.sock, 4)
+            count_b = _read_exact(rf, 4)
+            parts.append(count_b)
             (nrows,) = struct.unpack(">i", count_b)
-            if nrows > 0:
-                # rows are length-framed cell by cell; easiest exact reader:
-                # pull cells one by one
-                parts = [count_b]
-                for _ in range(nrows):
-                    nc_b = _recv_exact(self.sock, 4)
-                    (ncells,) = struct.unpack(">i", nc_b)
-                    parts.append(nc_b)
-                    for _ in range(ncells):
-                        head = _recv_exact(self.sock, 5)
-                        (cl,) = struct.unpack(">i", head[1:])
-                        parts.append(head + _recv_exact(self.sock, cl))
-                raw.append(b"".join(parts))
-            else:
-                raw.append(count_b)
+            if nrows == 0:
                 break
-        from ophidia_io_server_spark.protocol import deserialize_packets
-
-        return deserialize_packets([b"".join(raw)])
+            for _ in range(nrows):
+                nc_b = _read_exact(rf, 4)
+                parts.append(nc_b)
+                for _ in range(struct.unpack(">i", nc_b)[0]):
+                    head = _read_exact(rf, 5)
+                    parts.append(head)
+                    parts.append(_read_exact(rf, struct.unpack(">i", head[1:])[0]))
+        return deserialize_packets(parts)
 
     def close(self) -> None:
         try:
             q = b"QUIT"
             self.sock.sendall(struct.pack(">i", len(q)) + q)
         finally:
+            self._rfile.close()
             self.sock.close()

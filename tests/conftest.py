@@ -20,6 +20,25 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def group_job_ids(spark):
+    """Job ids of a job group.  The status store fills from the listener bus
+    asynchronously, so wait until the group's jobs show up."""
+    import time
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def ids(group: str) -> list[int]:
+        deadline = time.time() + 10
+        while True:
+            jobs = sorted(tracker.getJobIdsForGroup(group))
+            if jobs or time.time() > deadline:
+                return jobs
+            time.sleep(0.05)
+
+    return ids
+
+
+@pytest.fixture(scope="session")
 def frag_qty(spark):
     from ophidia_io_server_spark.sources.tables import lineitem_fragment
 

@@ -31,6 +31,21 @@ def test_rs_chunking_small_packets(spark):
     assert nfields == 2 and len(rows) == 40
 
 
+def test_rs_drain_runs_one_job(spark, group_job_ids):
+    """A multi-partition, shuffle-free result drains with ONE Spark job, not
+    one job per partition, and rows keep partition (id) order."""
+    sc = spark.sparkContext
+    df = random_fragment(spark, 400, 4, partitions=8).where("id_dim > 350")
+    group = "test-rs-drain-one-job"
+    sc.setJobGroup(group, "one-job drain")
+    try:
+        _, rows = deserialize_packets(serialize_result_set(df))
+    finally:
+        sc.setJobGroup(None, None)
+    assert [r[0] for r in rows] == list(range(351, 401))
+    assert len(group_job_ids(group)) == 1
+
+
 def test_rs_mixed_types(spark):
     df = spark.createDataFrame(
         [(1, 1.5, "ab", None), (2, -0.25, "", 7)],

@@ -138,6 +138,79 @@ def test_server_streams_multi_packet_results(server, monkeypatch):
         cli.close()
 
 
+def test_server_late_partition_failure_is_clean_E(server, spark, monkeypatch):
+    """A failure in the LAST partition, after the first packet is framed,
+    still becomes a clean 'E': the single drain job runs to completion
+    before 'K' is sent, so the connection stays usable."""
+    import functools
+
+    from pyspark.sql import functions as F
+
+    import ophidia_io_server_spark.server as srvmod
+    from ophidia_io_server_spark.protocol import serialize_result_set
+
+    monkeypatch.setattr(
+        srvmod, "serialize_result_set",
+        functools.partial(serialize_result_set, max_packet_len=64),
+    )
+    late = spark.range(1, 201, numPartitions=4).select(
+        F.col("id").alias("id_dim"),
+        F.when(F.col("id") == 200, F.raise_error(F.lit("late partition failure")))
+        .otherwise(F.array(F.col("id").cast("double"))).alias("measure"),
+    )
+    server.io_server.catalog.put("late_fail", late, cache=False)
+
+    host, port = server.address
+    cli = QueryClient(host, port)
+    try:
+        with pytest.raises(RuntimeError, match="late partition failure"):
+            cli.execute("operation=select;from=late_fail;field=id_dim|measure;"
+                        "select_alias=id_dim|measure")
+        cli.execute("operation=random_import;frag_name=after_late;nrows=4;array_len=2")
+        _, rows = cli.execute("operation=select;from=after_late;field=id_dim;"
+                              "select_alias=id_dim;order=id_dim")
+        assert [r[0] for r in rows] == [1, 2, 3, 4]
+    finally:
+        cli.close()
+
+
+def test_server_roundtrip_larger_than_one_packet(server):
+    """A result over MAX_PACKET_LEN (10k rows x 64 doubles, about 5 MB of
+    array cells) spans several 4 MB packets and decodes exactly."""
+    from ophidia_io_server_spark.protocol import MAX_PACKET_LEN
+
+    host, port = server.address
+    cli = QueryClient(host, port)
+    try:
+        cli.execute("operation=random_import;frag_name=big5mb;nrows=10000;array_len=64")
+        nfields, rows = cli.execute(
+            "operation=select;from=big5mb;field=id_dim|measure;"
+            "select_alias=id_dim|measure;order=id_dim")
+        want = [[r.id_dim, list(r.measure)] for r in
+                server.io_server.catalog.df("big5mb").orderBy("id_dim").collect()]
+        assert nfields == 2
+        assert len(rows) * 64 * 8 > MAX_PACKET_LEN
+        assert rows == want
+    finally:
+        cli.close()
+
+
+def test_server_tags_request_jobs(server, group_job_ids):
+    """Each request's jobs run under the job group oph-io:<peer port>:<n>;
+    a shuffle-free select over several partitions runs exactly one job."""
+    host, port = server.address
+    cli = QueryClient(host, port)
+    try:
+        cli.execute("operation=random_import;frag_name=tagged;nrows=400;array_len=4")
+        _, rows = cli.execute("operation=select;from=tagged;field=id_dim|measure;"
+                              "select_alias=id_dim|measure;where=id_dim>350")
+        assert sorted(r[0] for r in rows) == list(range(351, 401))
+        group = f"oph-io:{cli.sock.getsockname()[1]}:2"
+        assert len(group_job_ids(group)) == 1
+    finally:
+        cli.close()
+
+
 def test_server_restart_restores_fragments(spark, tmp_path):
     """Persist catalog → 'restart' (new server on restored catalog) → query
     over the wire: the reference's MetaDB reload-on-restart flow."""
