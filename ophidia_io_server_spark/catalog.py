@@ -5,8 +5,9 @@ The reference keeps a rwlock-protected linked list of databases each holding a
 hash table of fragment records (device, persistence flag, size).  Here the
 driver-side catalog is a plain dict of database → fragment entries wrapping
 cached DataFrames; Spark's own catalog handles nothing we need beyond temp
-views, and driver-side catalog mutation is single-threaded so no locks are
-required (SURVEY.md §4).
+views.  The catalog itself takes no lock: ``server.QueryServer`` serializes
+every ``IOServer.execute`` under its ``catalog_lock`` (the reference's
+rwlock), so concurrent connections never mutate it at the same time.
 """
 
 from __future__ import annotations

@@ -40,34 +40,6 @@ class QueryParseError(ValueError):
     pass
 
 
-def _number_binds(value: str) -> tuple[str, int]:
-    """Rewrite anonymous ``?`` to ``?1..?N`` (reference oph_query_parser.c:431-484)."""
-    out = []
-    n = 0
-    in_str = False
-    i = 0
-    while i < len(value):
-        c = value[i]
-        if c == "'":
-            in_str = not in_str
-            out.append(c)
-        elif c == "?" and not in_str:
-            if i + 1 < len(value) and value[i + 1].isdigit():
-                j = i + 1
-                while j < len(value) and value[j].isdigit():
-                    j += 1
-                out.append(value[i:j])
-                n = max(n, int(value[i + 1 : j]))
-                i = j
-                continue
-            n += 1
-            out.append(f"?{n}")
-        else:
-            out.append(c)
-        i += 1
-    return "".join(out), n
-
-
 def split_multivalue(value: str) -> list[str]:
     """Split a list-valued clause on top-level ``|`` (not inside quotes/parens)."""
     parts: list[str] = []

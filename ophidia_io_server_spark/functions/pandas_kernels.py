@@ -76,46 +76,6 @@ def idwt_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda a: _haar_idwt(np.asarray(a, dtype=np.float64)).tolist())
 
 
-@F.pandas_udf(ArrayType(DoubleType()))
-def fit_linear_udf(s: pd.Series) -> pd.Series:
-    """Least-squares line over (index, value); returns fitted values."""
-
-    def k(a):
-        y = np.asarray(a, dtype=np.float64)
-        x = np.arange(len(y), dtype=np.float64)
-        b, c0 = np.polyfit(x, y, 1)
-        return (c0 + b * x).tolist()
-
-    return s.map(k)
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def fit_linear_coeff_udf(s: pd.Series) -> pd.Series:
-    """[intercept, slope] of the least-squares line over (index, value)."""
-
-    def k(a):
-        y = np.asarray(a, dtype=np.float64)
-        x = np.arange(len(y), dtype=np.float64)
-        b, c0 = np.polyfit(x, y, 1)
-        return [float(c0), float(b)]
-
-    return s.map(k)
-
-
-def spline_udf(new_size: int):
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _k(s: pd.Series) -> pd.Series:
-        def k(a):
-            y = np.asarray(a, dtype=np.float64)
-            x = np.linspace(0.0, 1.0, len(y))
-            xi = np.linspace(0.0, 1.0, new_size)
-            return np.interp(xi, x, y).tolist()
-
-        return s.map(k)
-
-    return _k
-
-
 def kcluster_udf(k: int):
     """Deterministic 1-D k-means per array.
 

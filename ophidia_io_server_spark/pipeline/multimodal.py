@@ -1,8 +1,8 @@
 """Multimodal columns: opaque binary payloads with typed metadata, processed
 through Arrow-batched ``mapInPandas`` pipelines.
 
-The container has no image/audio codecs, so the *decode* kernels are
-explicitly stubbed (deterministic fake features / NotImplementedError), while
+No image/audio codec is a dependency, so the *decode* kernels are
+explicitly stubbed with deterministic fake features, while
 everything Spark-side — schema, batching, partitioning, UDF signatures — is
 real and tested.  Swapping the stub for PIL/librosa is a one-function change.
 """
@@ -45,14 +45,6 @@ def attach_binary_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
         payload.alias("payload"),
         F.lit("application/octet-stream").alias("media_type"),
         F.length(payload).cast("bigint").alias("payload_bytes"),
-    )
-
-
-def decode_image(payload: bytes) -> "np.ndarray":
-    """Real decoder entry point — not available in this container."""
-    raise NotImplementedError(
-        "image decoding requires a codec library (PIL/opencv) not present in "
-        "this environment; extract_features uses the deterministic stub"
     )
 
 

@@ -20,7 +20,7 @@ term-sorted contribution list (``F.aggregate`` ↔ DuckDB
 sums see the identical addition order; the one transcendental (ln in the
 idf) is covered by the public 6-dp rounding.  BM25 constants and the
 association order of every float expression are mirrored token-for-token
-in the SQL oracle (see ``workload.py: bm25_doc_retrieval``).
+in the SQL oracle (see ``workloads/analytics.py: bm25_doc_retrieval``).
 
 The scoring function is the Robertson/Sparck-Jones BM25 with the Lucene
 idf variant ``ln(1 + (N - df + 0.5)/(df + 0.5))`` (always positive).

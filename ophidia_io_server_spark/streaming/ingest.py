@@ -320,6 +320,16 @@ def stream_stream_attribution_outer(views: DataFrame, purchases: DataFrame,
     ).drop("v_user")
 
 
+def _drain(q, timeout_sec: int) -> None:
+    """Wait for an availableNow query to finish.  A query still running after
+    ``timeout_sec`` is stopped and raises ``TimeoutError``, so no caller reads
+    a partial sink; an error raised by the query itself propagates unchanged."""
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(f"streaming query {q.name or q.id} did not finish "
+                           f"within {timeout_sec} s; stopped")
+
+
 def run_available_now(sdf: DataFrame, query_name: str, output_mode: str = "complete",
                       timeout_sec: int = 300) -> DataFrame:
     """Process everything currently available, write to an in-memory sink,
@@ -342,7 +352,7 @@ def run_available_now(sdf: DataFrame, query_name: str, output_mode: str = "compl
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(timeout_sec)
+            _drain(q, timeout_sec)
     finally:
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
                        old_ndmb)
@@ -360,7 +370,7 @@ def streaming_insert_fragment(spark: SparkSession, stream: DataFrame, catalog, f
         batches.append(batch_df.persist())
 
     q = stream.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
-    q.awaitTermination(timeout_sec)
+    _drain(q, timeout_sec)
     if not batches:
         # consistent return type on an all-empty stream: a typed empty
         # fragment with the stream's schema (same fix as minhash_lsh_stream)
@@ -490,7 +500,7 @@ def quantile_sketch_stream(stream_df: DataFrame, keys: list[str],
 
     q = (stream_df.writeStream.foreachBatch(sink)
          .trigger(availableNow=True).start())
-    q.awaitTermination(timeout_sec)
+    _drain(q, timeout_sec)
     if state["sk"] is not None:
         return state["sk"]
     spark = stream_df.sparkSession
@@ -576,7 +586,7 @@ def minhash_lsh_stream(stream_docs: DataFrame, n: int = 3,
     with stream_shuffle_partitions(stream_docs.sparkSession):
         q = (stream_docs.writeStream.foreachBatch(sink)
              .trigger(availableNow=True).start())
-        q.awaitTermination(timeout_sec)
+        _drain(q, timeout_sec)
     if not emitted:
         # consistent return type on an all-empty stream (r7 ADVICE: a
         # None here forced every caller to special-case it)

@@ -1,45 +1,3 @@
-"""Declared workload registry — compatibility facade.
+"""Exists only because ``bench.py`` must stay byte-identical; import from ``workloads``."""
 
-The registry itself lives in ``ophidia_io_server_spark/workloads/`` (split
-per-family in round 9: base/core/tpch/docs/streaming/primitives/analytics/
-relational/suites — r8 VERDICT #3).  Importing THIS module keeps the
-original surface: ``WORKLOADS``, ``GATE_ORDER``, ``ordered_workloads``,
-``registry_composition``, ``flagship``, ``_SUITES`` and every per-workload
-function are re-exported unchanged, so callers (driver entry, bench,
-scripts, tests) need no changes.  See ``workloads/base.py`` for the
-oracle-match discipline and row-order policy docstring.
-"""
-
-from __future__ import annotations
-
-# registration side-effects first: importing the package registers all
-# workloads in the same per-module order as the original monolith
-from ophidia_io_server_spark.workloads import (  # noqa: F401
-    GATE_ORDER,
-    WORKLOADS,
-    Workload,
-    flagship,
-    ordered_workloads,
-    registry_composition,
-    workload,
-)
-from ophidia_io_server_spark.workloads.base import (  # noqa: F401
-    _FRAG_BOTH_CTE,
-    _FRAG_QTY_CTE,
-    _corpus_tag,
-    _ensure_session_defaults,
-    _explode_arrays,
-    _exploded_oracle,
-    _server,
-)
-from ophidia_io_server_spark.workloads.suites import _SUITES  # noqa: F401
-
-# every workload function remains addressable as workload.<name>
-from ophidia_io_server_spark.workloads.core import *  # noqa: F401,F403
-from ophidia_io_server_spark.workloads.tpch import *  # noqa: F401,F403
-from ophidia_io_server_spark.workloads.docs import *  # noqa: F401,F403
-from ophidia_io_server_spark.workloads.streaming import *  # noqa: F401,F403
-from ophidia_io_server_spark.workloads.primitives import *  # noqa: F401,F403
-from ophidia_io_server_spark.workloads.analytics import *  # noqa: F401,F403
-from ophidia_io_server_spark.workloads.relational import *  # noqa: F401,F403
-from ophidia_io_server_spark.workloads.suites import *  # noqa: F401,F403
+from ophidia_io_server_spark.workloads import WORKLOADS  # noqa: F401

@@ -130,7 +130,7 @@ def _changed_gate_rows(since: str) -> set[str]:
     import subprocess
 
     from ophidia_io_server_spark.workloads.suites import GATE_ORDER, _SUITES
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     repo = __import__("pathlib").Path(__file__).resolve().parent.parent
     touched = subprocess.run(
@@ -226,7 +226,7 @@ def main():
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "16")
     from ophidia_io_server_spark import get_spark
-    from ophidia_io_server_spark.workload import ordered_workloads
+    from ophidia_io_server_spark.workloads import ordered_workloads
 
     WORKLOADS = ordered_workloads()
 

@@ -55,7 +55,7 @@ def oracle_double_run(sf_dir: str) -> int:
     """Every gate oracle under threads=1 vs default threads, cell-diffed."""
     import duckdb
 
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
     from ophidia_io_server_spark.workloads.suites import GATE_ORDER
 
     cons = []
@@ -101,7 +101,7 @@ def main() -> int:
         return orc
 
     from ophidia_io_server_spark import get_spark
-    from ophidia_io_server_spark.workload import ordered_workloads
+    from ophidia_io_server_spark.workloads import ordered_workloads
     from ophidia_io_server_spark.workloads.suites import GATE_ORDER
 
     WORKLOADS = ordered_workloads()

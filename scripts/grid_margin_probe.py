@@ -217,7 +217,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
     from ophidia_io_server_spark.workloads.suites import GATE_ORDER
 
     con = duckdb.connect()

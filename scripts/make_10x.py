@@ -27,8 +27,8 @@ default replica avoids --
 - a near-dup clique cluster: replicas of docs with doc_id %% 50 == 7 keep
   their text UNPERMUTED, so each such doc becomes a k-replica exact/
   near-dup clique (the quadratic candidate regime for MinHash/LSH).
-Used by scripts/skew_probe.py to prove the AQE-skew/salting/
-bucket_seconds paths fire at scale (PERF.md r7).
+PERF.md r7 records the AQE-skew/salting/bucket_seconds paths firing
+on this replica at scale.
 
 Usage: python scripts/make_10x.py [src_sf_dir] [dst_dir] [k] [--skew]
 """

@@ -49,7 +49,7 @@ def main() -> int:
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "16")
     from ophidia_io_server_spark import get_spark
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")

@@ -46,7 +46,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from bench import HEADLINE, STREAM_ONCE
     from ophidia_io_server_spark import get_spark
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
     from ophidia_io_server_spark.sources.tables import (
         lineitem_fragment_cached,
         load_table,

@@ -83,7 +83,7 @@ def main():
                 "stream_quantile_rollup"]
     orig_staged = st._staged_events_dir
     import ophidia_io_server_spark.workloads.relational as rel
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     for name in affected:
         fn = WORKLOADS[name].fn

@@ -4,7 +4,7 @@ fails tests, not just the benchmark."""
 
 import pytest
 
-from ophidia_io_server_spark.workload import WORKLOADS
+from ophidia_io_server_spark.workloads import WORKLOADS
 
 SF = "/root/testdata/sf0.001"
 

@@ -9,7 +9,7 @@ from pathlib import Path
 
 import pytest
 
-from ophidia_io_server_spark.workload import WORKLOADS
+from ophidia_io_server_spark.workloads import WORKLOADS
 
 SF = "/root/testdata/sf0.001"
 

@@ -97,7 +97,7 @@ def test_mannwhitney_exact_small_case(spark, tmp_path):
     pdf.to_parquet(str(tmp_path / "events.parquet"))
     for t in ("region", "nation"):  # load_table only reads events here
         pass
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     out = WORKLOADS["events_mannwhitney_utest"].fn(
         spark, str(tmp_path)).collect()[0]
@@ -133,7 +133,7 @@ def test_gini_known_values(spark, tmp_path):
             "o_orderdate": pd.to_datetime("2024-01-01"),
             "o_orderpriority": "1-URGENT"})
         pdf.to_parquet(str(tmp_path / "orders.parquet"))
-        from ophidia_io_server_spark.workload import WORKLOADS
+        from ophidia_io_server_spark.workloads import WORKLOADS
 
         out = WORKLOADS["orders_gini_revenue"].fn(
             spark, str(tmp_path)).collect()[0]
@@ -154,7 +154,7 @@ def test_winsorize_boundaries_exact(spark, tmp_path):
         "l_linestatus": "O",
         "l_shipdate": pd.to_datetime("2024-01-01")})
     pdf.to_parquet(str(tmp_path / "lineitem.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     out = WORKLOADS["lineitem_winsorized_stats"].fn(
         spark, str(tmp_path)).collect()[0]
@@ -188,7 +188,7 @@ def test_acf_matches_direct_formula(spark, tmp_path):
     pdf = pd.DataFrame(rows, columns=[
         "event_id", "ts", "user_id", "event_type", "value", "props"])
     pdf.to_parquet(str(tmp_path / "events.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     got = {r["lag"]: r["acf"] for r in
            WORKLOADS["events_acf"].fn(spark, str(tmp_path)).collect()}
@@ -204,7 +204,7 @@ def test_acf_matches_direct_formula(spark, tmp_path):
 
 
 def test_seasonal_decompose_identities(spark):
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     out = WORKLOADS["events_seasonal_decompose"].fn(
         spark, "/root/testdata/sf0.001").collect()
@@ -230,7 +230,7 @@ def test_kmv_exact_when_k_covers_universe(spark, tmp_path):
         "source": ["s1", "s1", "s2", "s3"],
         "n_chars": [5, 5, 5, 3]})
     pdf.to_parquet(str(tmp_path / "documents.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     rows = WORKLOADS["source_kmv_overlap"].fn(spark, str(tmp_path)).collect()
     got = {(r["source_a"], r["source_b"]):
@@ -245,7 +245,7 @@ def test_kmv_exact_when_k_covers_universe(spark, tmp_path):
 
 
 def test_weighted_sample_layout_invariant(spark):
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     a = WORKLOADS["doc_weighted_sample"].fn(
         spark, "/root/testdata/sf0.001").collect()
@@ -259,7 +259,7 @@ def test_weighted_sample_heavier_docs_overrepresented(spark):
     """Sanity of proportionality: the selected docs' mean weight must
     exceed the corpus mean weight (heavier docs win more races)."""
     from ophidia_io_server_spark.sources.tables import load_table
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     sel = WORKLOADS["doc_weighted_sample"].fn(
         spark, "/root/testdata/sf0.001").agg(F.avg("w")).collect()[0][0]
@@ -284,7 +284,7 @@ def test_ks_exact_small_case(spark, tmp_path):
         "event_id", "ts", "user_id", "event_type", "value", "props"])
     pdf["ts"] = pd.to_datetime(pdf["ts"])
     pdf.to_parquet(str(tmp_path / "events.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     out = WORKLOADS["events_ks_test"].fn(spark, str(tmp_path)).collect()[0]
     # CDFs at v=100: Fa=1/3, Fb=0 -> |.333|; v=200: 2/3 vs 1/2 -> 1/6;
@@ -313,7 +313,7 @@ def test_chi2_matches_direct_formula(spark, tmp_path):
     pdf = pd.DataFrame(rows, columns=[
         "event_id", "ts", "user_id", "event_type", "value", "props"])
     pdf.to_parquet(str(tmp_path / "events.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     out = WORKLOADS["events_chi2_independence"].fn(
         spark, str(tmp_path)).collect()[0]
@@ -344,7 +344,7 @@ def test_mad_known_values(spark, tmp_path):
         "l_discount": 0.0, "l_tax": 0.0, "l_returnflag": "N",
         "l_linestatus": "O", "l_shipdate": pd.to_datetime("2024-01-01")})
     pdf.to_parquet(str(tmp_path / "lineitem.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     out = WORKLOADS["lineitem_mad_outliers"].fn(
         spark, str(tmp_path)).collect()[0]
@@ -371,7 +371,7 @@ def test_benford_digit_extraction_and_expectation(spark, tmp_path):
         "o_orderdate": pd.to_datetime("2024-01-01"),
         "o_orderpriority": "1"})
     pdf.to_parquet(str(tmp_path / "orders.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     got = {r["digit"]: (r["n_obs"], r["expected"]) for r in
            WORKLOADS["orders_benford_digits"].fn(
@@ -432,7 +432,7 @@ def test_conversion_ztest_hand_case(spark, tmp_path):
     pdf = pd.DataFrame(rows, columns=[
         "event_id", "ts", "user_id", "event_type", "value", "props"])
     pdf.to_parquet(str(tmp_path / "events.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     out = WORKLOADS["events_conversion_ztest"].fn(
         spark, str(tmp_path)).collect()[0]
@@ -446,7 +446,7 @@ def test_conversion_ztest_hand_case(spark, tmp_path):
 
 
 def test_rrf_fuses_both_rankings(spark):
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     rows = WORKLOADS["doc_rrf_retrieval"].fn(
         spark, "/root/testdata/sf0.001").collect()
@@ -481,7 +481,7 @@ def test_ewma_exact_dyadic_recursion(spark, tmp_path):
     pd.DataFrame(rows, columns=[
         "event_id", "ts", "user_id", "event_type", "value", "props"]
     ).to_parquet(str(tmp_path / "events.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     out = sorted(WORKLOADS["events_ewma_halflife"].fn(
         spark, str(tmp_path)).collect(), key=lambda r: r["hr"])
@@ -511,7 +511,7 @@ def test_quantile_normalize_identity_on_single_group(spark, tmp_path):
     pd.DataFrame(rows, columns=[
         "event_id", "ts", "user_id", "event_type", "value", "props"]
     ).to_parquet(str(tmp_path / "events.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     out = WORKLOADS["events_quantile_normalize"].fn(
         spark, str(tmp_path)).collect()
@@ -523,7 +523,7 @@ def test_quantile_normalize_identity_on_single_group(spark, tmp_path):
 def test_quantile_normalize_monotone_and_pooled_support(spark):
     """Normalized values must be drawn from the pooled support and be
     monotone in v within each type."""
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     rows = WORKLOADS["events_quantile_normalize"].fn(
         spark, "/root/testdata/sf0.001").collect()
@@ -551,7 +551,7 @@ def test_association_triples_hand_corpus(spark, tmp_path):
         "doc_id": range(len(texts)), "text": texts, "lang": "en",
         "source": "s", "n_chars": [len(t) for t in texts],
     }).to_parquet(str(tmp_path / "documents.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     rows = WORKLOADS["token_association_triples"].fn(
         spark, str(tmp_path)).collect()
@@ -580,7 +580,7 @@ def test_spearman_matches_scipy_free_formula(spark, tmp_path):
         "l_returnflag": "N", "l_linestatus": "O",
         "l_shipdate": pd.to_datetime("2024-01-01")})
     pdf.to_parquet(str(tmp_path / "lineitem.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     out = WORKLOADS["lineitem_spearman_corr"].fn(
         spark, str(tmp_path)).collect()[0]
@@ -614,7 +614,7 @@ def test_spearman_perfect_monotone(spark, tmp_path):
         "l_discount": 0.0, "l_tax": 0.0, "l_returnflag": "N",
         "l_linestatus": "O", "l_shipdate": pd.to_datetime("2024-01-01")})
     pdf.to_parquet(str(tmp_path / "lineitem.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     out = WORKLOADS["lineitem_spearman_corr"].fn(
         spark, str(tmp_path)).collect()[0]
@@ -668,7 +668,7 @@ def test_cusum_clamped_recursion(spark, tmp_path):
     pd.DataFrame(rows, columns=[
         "event_id", "ts", "user_id", "event_type", "value", "props"]
     ).to_parquet(str(tmp_path / "events.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     out = sorted(WORKLOADS["events_cusum_drift"].fn(
         spark, str(tmp_path)).collect(), key=lambda r: r["hr"])
@@ -690,7 +690,7 @@ def test_dbscan_matches_python_union_find(spark):
 
     import duckdb
 
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     ids = [r[0] for r in duckdb.sql(
         "SELECT event_id FROM "
@@ -747,7 +747,7 @@ def test_dbscan_matches_python_union_find(spark):
 
 
 def test_ohlc_stream_equals_batch(spark):
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     sf = "/root/testdata/sf0.001"
     batch = {(r["hour_start"], r["event_type"]): tuple(r)[2:]
@@ -775,7 +775,7 @@ def test_hourly_peaks_hand_series(spark, tmp_path):
     pd.DataFrame(rows, columns=[
         "event_id", "ts", "user_id", "event_type", "value", "props"]
     ).to_parquet(str(tmp_path / "events.parquet"))
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     got = {(r["hr"].hour, r["y"], r["prominence"]) for r in
            WORKLOADS["events_hourly_peaks"].fn(spark, str(tmp_path)).collect()}

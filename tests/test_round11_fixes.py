@@ -22,7 +22,7 @@ from pathlib import Path
 
 import pytest
 
-from ophidia_io_server_spark.workload import WORKLOADS
+from ophidia_io_server_spark.workloads import WORKLOADS
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
 
@@ -138,7 +138,7 @@ def test_changed_since_maps_modules_to_gate_rows():
     # streaming — the map must send analytics.py edits to analytics_suite
     import inspect
 
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     fn = WORKLOADS["events_value_psi"].fn
     while hasattr(fn, "__wrapped__"):

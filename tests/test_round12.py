@@ -89,7 +89,7 @@ def test_canary_pins_shape_and_parse():
 
 def test_canary_green_in_this_container(spark):
     """n_drift == 0 for every chain when run where the pins were made."""
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     rows = {r["chain"]: r for r in
             WORKLOADS["determinism_canary"].fn(spark, SF_SMALL).collect()}
@@ -153,7 +153,7 @@ def test_infer_grid_and_margin():
 
 @pytest.fixture(scope="module")
 def tdigest(spark):
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     return WORKLOADS["events_tdigest_quantiles"].fn(spark, SF_SMALL) \
         .toPandas().sort_values(["event_type", "cluster"]) \
@@ -193,7 +193,7 @@ def test_tdigest_tail_resolution(tdigest):
 def test_tdigest_partition_invariance(spark, tdigest):
     """Merge-invariance by construction: shuffling/partitioning the
     input must not move a single bit of the digest."""
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -238,7 +238,7 @@ def test_tdigest_quantile_error_bound(tdigest):
 
 
 def test_stream_funnel_sessions_certificate(spark):
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     df = WORKLOADS["stream_funnel_sessions"].fn(spark, SF_SMALL).toPandas()
     assert len(df) > 0

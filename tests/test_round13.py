@@ -59,7 +59,7 @@ def test_tsdecomp_rows_are_transcendental_free():
     probe = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(probe)
 
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     for row in sorted(probe.TRANS_FREE_ROWS):
         calls = probe.transcendental_calls(WORKLOADS[row].oracle)
@@ -72,7 +72,7 @@ def test_tsdecomp_rows_are_transcendental_free():
 
 
 def test_env_fingerprint_facts(spark):
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
     from ophidia_io_server_spark.workloads.env_pins import SESSION_PINS
 
     rows = {r["fact"]: r for r in
@@ -104,7 +104,7 @@ def test_env_fingerprint_facts(spark):
 def test_env_fingerprint_shuffle_partitions_not_hashed(spark):
     """Partition sizing is proven result-invariant (r11 sweep) — hashing
     it would add a benign-variation false-red axis."""
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     facts = [r["fact"] for r in
              WORKLOADS["env_fingerprint"].fn(spark, SF_SMALL).collect()]
@@ -118,7 +118,7 @@ def test_env_fingerprint_shuffle_partitions_not_hashed(spark):
 
 
 def test_pettitt_exponent_consistent(spark):
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     for r in WORKLOADS["events_pettitt_changepoint"].fn(
             spark, SF_SMALL).collect():
@@ -129,7 +129,7 @@ def test_pettitt_exponent_consistent(spark):
 
 
 def test_markov_cells_are_sufficient(spark):
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
     from ophidia_io_server_spark.workloads.analytics import (
         markov_entropy_readout,
     )
@@ -185,7 +185,7 @@ def test_stream_tdigest_matches_batch(spark):
 
     from ophidia_io_server_spark.pipeline.quantile import canonical_tdigest
     from ophidia_io_server_spark.sources.tables import load_table
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     srows = {(r["event_type"], r["cluster"]): r for r in
              WORKLOADS["stream_tdigest_rollup"].fn(spark, SF_SMALL)
@@ -211,7 +211,7 @@ def test_stream_moments_matches_python(spark):
     integers."""
     import duckdb
 
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     rows = {r["event_type"]: r for r in
             WORKLOADS["stream_moments_monitor"].fn(spark, SF_SMALL)
@@ -268,7 +268,7 @@ def test_tdigest_thresholds_bounded_at_huge_n(spark):
 def test_tdigest_estimates_gate_arm(spark):
     """The estimator gate arm's bracket certificate must hold for every
     (type, q), and its rows must agree with the pipeline API."""
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     rows = WORKLOADS["events_tdigest_estimates"].fn(spark, SF_SMALL) \
         .collect()

@@ -41,7 +41,7 @@ def test_moments_drain_is_batch_count_invariant(spark, tmp_path):
     commutative-monoid argument the 4->2 reduction rests on)."""
     import ophidia_io_server_spark.workloads.streaming as st
     from ophidia_io_server_spark.sources.tables import load_table
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     fn = WORKLOADS["stream_moments_monitor"].fn
     committed = _rows_key(fn(spark, SF_SMALL))
@@ -64,7 +64,7 @@ def test_single_sentinel_outer_join_still_evicts(spark):
     no-data micro-batch (noDataMicroBatches, pinned in
     run_available_now).  A regression to zero unmatched rows means the
     eviction pass no longer runs before the drain terminates."""
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
     from ophidia_io_server_spark.workloads.streaming import (
         _staged_events_outer_dir,
     )

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 
 def test_registry_composition_zero_uncovered():
-    from ophidia_io_server_spark.workload import (
+    from ophidia_io_server_spark.workloads import (
         GATE_ORDER,
         WORKLOADS,
         registry_composition,

@@ -18,7 +18,7 @@ def test_sketch_bounds_vs_exact(spark):
     """The workload itself now computes sketch-vs-exact error bounds inside
     Spark and emits booleans (so the driver gate can hash it exactly); here we
     assert every bound holds and the exact n matches an independent count."""
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     got = {r.event_type: r for r in
            WORKLOADS["sketch_approx_stats"].fn(spark, SF).collect()}

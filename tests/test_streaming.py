@@ -338,3 +338,62 @@ def test_closeout_emits_each_user_once_after_timeout(spark, tmp_path):
         10: (2, t0 + dt.timedelta(minutes=10)),
         20: (1, t0 + dt.timedelta(minutes=20)),
     }
+
+
+@pytest.mark.parametrize("drain", ["run_available_now", "streaming_insert_fragment"])
+def test_drain_timeout_raises_and_stops_query(spark, tmp_path, server, drain):
+    """A drain still running at its timeout stops the query and raises
+    instead of returning a partial sink.  The memory sink runs the sleeping
+    UDF inside the micro-batch; the foreachBatch sink only persists each
+    batch lazily, so there the one-file-per-trigger source keeps the query
+    running past the timeout."""
+    import time
+
+    @F.udf("bigint")
+    def sleepy(x):
+        time.sleep(3)
+        return x
+
+    path = str(tmp_path / "slow")
+    spark.range(64).repartition(64).write.parquet(path)
+    stream = (spark.readStream.schema("id bigint")
+              .option("maxFilesPerTrigger", 1).parquet(path)
+              .select(sleepy("id").alias("event_id")))
+    with pytest.raises(TimeoutError, match="did not finish within 1 s"):
+        if drain == "run_available_now":
+            run_available_now(stream, "t_slow", output_mode="append",
+                              timeout_sec=1)
+        else:
+            streaming_insert_fragment(spark, stream, server.catalog,
+                                      "slow_frag", timeout_sec=1)
+    assert spark.streams.active == []
+
+
+def test_one_drain_and_no_facade_imports():
+    """Every stream drain goes through ``ingest._drain``, and only the
+    byte-frozen ``bench.py`` still imports the ``workload`` facade."""
+    import inspect
+    import re
+    from pathlib import Path
+
+    import ophidia_io_server_spark
+    from ophidia_io_server_spark.streaming import ingest
+
+    pkg = Path(ophidia_io_server_spark.__file__).parent
+    sites = [(p, n) for p in sorted(pkg.rglob("*.py"))
+             for n, line in enumerate(p.read_text().splitlines(), 1)
+             if "awaitTermination(" in line]
+    assert len(sites) == 1, sites
+    path, lineno = sites[0]
+    src, start = inspect.getsourcelines(ingest._drain)
+    assert path == Path(ingest.__file__)
+    assert start <= lineno < start + len(src)
+
+    facade = re.compile(
+        r"ophidia_io_server_spark\.workload\b"
+        r"|from\s+ophidia_io_server_spark\s+import\s+\(?\s*workload\b")
+    repo = pkg.parent
+    importers = sorted(
+        str(p.relative_to(repo)) for p in repo.rglob("*.py")
+        if facade.search(p.read_text()))
+    assert importers == ["bench.py"], importers

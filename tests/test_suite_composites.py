@@ -9,12 +9,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ophidia_io_server_spark.workload import (
+from ophidia_io_server_spark.workloads import (
     GATE_ORDER,
     WORKLOADS,
-    _SUITES,
     ordered_workloads,
 )
+from ophidia_io_server_spark.workloads.suites import _SUITES
 SF_DIR = "/root/testdata/sf0.001"
 
 

@@ -45,7 +45,7 @@ def test_q21_aggregate_form_equals_correlated_exists(con):
         GROUP BY 1, 2, 3
         ORDER BY numwait DESC, s.s_suppkey LIMIT 100
     """).fetchall()
-    from ophidia_io_server_spark.workload import WORKLOADS
+    from ophidia_io_server_spark.workloads import WORKLOADS
 
     rewritten = con.sql(WORKLOADS["tpch_q21_waiting_suppliers"].oracle).fetchall()
     assert correlated == rewritten

@@ -10,7 +10,7 @@ import math
 import duckdb
 import pytest
 
-from ophidia_io_server_spark.workload import WORKLOADS
+from ophidia_io_server_spark.workloads import WORKLOADS
 
 SF = "/root/testdata/sf0.001"
 

@@ -11,7 +11,7 @@ import duckdb
 import numpy as np
 import pytest
 
-from ophidia_io_server_spark.workload import WORKLOADS
+from ophidia_io_server_spark.workloads import WORKLOADS
 
 SF = "/root/testdata/sf0.001"
 
