@@ -147,32 +147,45 @@ class Catalog:
     # IS the schema file — no extra metadata format to version.
 
     def persist(self, root: str, id_files: int | None = None) -> list[str]:
+        """Write every non-temp fragment to a sibling temp directory and
+        swap it in for ``root`` only after the last write, so a failed
+        write leaves the previous snapshot intact."""
+        import os
         import shutil
+        import uuid
 
         from pyspark.sql import functions as F
 
+        root = os.path.normpath(root)
+        tmp = f"{root}.tmp-{uuid.uuid4().hex}"
         saved = []
-        shutil.rmtree(root, ignore_errors=True)
-        for db, frags in self.dbs.items():
-            for frag, entry in frags.items():
-                if entry.temp:
-                    continue
-                df = entry.df
-                if "id_dim" in df.columns:
-                    # range-partitioned + sorted layout: each parquet file
-                    # covers a tight contiguous id range, so restored
-                    # fragments get row-group/file skipping on id_dim
-                    # predicates (the cube's partition-pruning backbone)
-                    n = id_files or df.sparkSession.sparkContext.defaultParallelism
-                    df = df.repartitionByRange(n, F.col("id_dim").asc()) \
-                           .sortWithinPartitions("id_dim")
-                df.write.mode("overwrite").parquet(f"{root}/{db}/{frag}")
-                saved.append(f"{db}.{frag}")
-        # record empty databases too (they must survive restart)
-        import os
-
-        for db in self.dbs:
-            os.makedirs(f"{root}/{db}", exist_ok=True)
+        try:
+            for db, frags in self.dbs.items():
+                for frag, entry in frags.items():
+                    if entry.temp:
+                        continue
+                    df = entry.df
+                    if "id_dim" in df.columns:
+                        # range-partitioned + sorted layout: each parquet file
+                        # covers a tight contiguous id range, so restored
+                        # fragments get row-group/file skipping on id_dim
+                        # predicates (the cube's partition-pruning backbone)
+                        n = id_files or df.sparkSession.sparkContext.defaultParallelism
+                        df = df.repartitionByRange(n, F.col("id_dim").asc()) \
+                               .sortWithinPartitions("id_dim")
+                    df.write.mode("overwrite").parquet(f"{tmp}/{db}/{frag}")
+                    saved.append(f"{db}.{frag}")
+            # record empty databases too (they must survive restart)
+            for db in self.dbs:
+                os.makedirs(f"{tmp}/{db}", exist_ok=True)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        old = f"{root}.old-{uuid.uuid4().hex}"
+        if os.path.exists(root):
+            os.replace(root, old)
+        os.replace(tmp, root)
+        shutil.rmtree(old, ignore_errors=True)
         return saved
 
     def persist_versioned(self, root: str, id_files: int | None = None) -> int:

@@ -4,23 +4,24 @@ perplexity ⇒ boilerplate, gibberish, or wrong-language text).
 
 A full KenLM is out of scope for a container without the library; the
 distributed shape is the same for any fixed n, so this implements the
-bigram case end-to-end:
+add-one order-n model end-to-end, with the bigram functions as its
+order-2 calls:
 
-- **Train** = two aggregations over the exploded bigram stream:
-  ``c(w1,w2)`` and the context total ``c(w1) = Σ_w2 c(w1,w2)``, plus the
+- **Train** = two aggregations over the exploded window stream:
+  ``c(ctx,w)`` and the context total ``c(ctx) = Σ_w c(ctx,w)``, plus the
   corpus vocabulary size ``V`` (one distinct-count).  All map-side
   combined; the model lives as DataFrames, never on the driver.
 - **Score** = add-one smoothed conditional
-  ``P(w2|w1) = (c(w1,w2)+1)/(c(w1)+V)``; a document's score is the mean
-  ``ln P`` over its bigrams, and ``ppl = exp(−mean)``.
-- The per-document sum folds the bigrams in POSITION order
+  ``P(w|ctx) = (c(ctx,w)+1)/(c(ctx)+V)``; a document's score is the mean
+  ``ln P`` over its windows, and ``ppl = exp(−mean)``.
+- The per-document sum folds the windows in POSITION order
   (sort-then-left-fold), so the SQL oracle adds the same floats in the
   same order; ln/exp are transcendental and sit inside the public 6-dp
   rounding.
 
-Scale shape: the score join is a shuffled equi-join of the corpus bigram
-stream against the bigram-count table on (w1, w2) — the natural key, with
-AQE handling the Zipfian skew of frequent bigrams; the context-count join
+Scale shape: the score join is a shuffled equi-join of the corpus window
+stream against the count table on (ctx, w) — the natural key, with AQE
+handling the Zipfian skew of frequent n-grams; the context-count join
 rides the same shuffle key prefix.  V and any global stats are scalar
 broadcasts.  Self-training (score the corpus that trained the model) is
 the CCNet bootstrap; ``train`` and ``score`` are separable so a clean
@@ -38,87 +39,34 @@ from ophidia_io_server_spark.sources.tables import spread
 
 def bigram_stream(docs: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:
-    """(id, pos, w1, w2) — one row per adjacent token pair, pos 1-based."""
-    toks = (
-        docs.where(F.col(text_col).isNotNull())
-        .select(F.col(id_col), tokens_col(F.col(text_col)).alias("tk"))
-        .withColumn("n", F.size("tk").cast("bigint"))
-        .where(F.col("n") >= 2)
-    )
-    pair = F.transform(
-        F.sequence(F.lit(1), (F.col("n") - 1).cast("int")),
-        lambda i: F.struct(
-            i.cast("bigint").alias("pos"),
-            F.element_at("tk", i.cast("int")).alias("w1"),
-            F.element_at("tk", (i + 1).cast("int")).alias("w2"),
-        ),
-    )
-    return toks.select(id_col, F.explode(pair).alias("b")).select(
-        id_col, "b.pos", "b.w1", "b.w2")
+    """(id, pos, w1, w2) — one row per adjacent token pair, pos 1-based:
+    the order-2 ``ngram_stream``, whose context is the single preceding
+    token."""
+    return ngram_stream(docs, 2, text_col, id_col).select(
+        id_col, "pos", F.col("ctx").alias("w1"), F.col("w").alias("w2"))
 
 
 def train_bigram_model(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id"):
-    """Returns (bigram_counts, context_counts, vocab_size_df): the add-one
-    bigram model as DataFrames — (w1, w2, c12), (w1, c1), and a single-row
-    (vsz) frame for broadcast."""
-    big = bigram_stream(spread(docs), text_col, id_col)
-    bc = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("bigint").alias("c12"))
-    cc = big.groupBy("w1").agg(F.count(F.lit(1)).cast("bigint").alias("c1"))
-    vocab = (
-        docs.where(F.col(text_col).isNotNull())
-        .select(F.explode(tokens_col(F.col(text_col))).alias("t"))
-        .agg(F.countDistinct("t").cast("bigint").alias("vsz"))
-    )
-    return bc, cc, vocab
+    """The add-one bigram model: ``train_ngram_model`` at order 2."""
+    return train_ngram_model(docs, 2, text_col, id_col)
 
 
 def perplexity_scores(docs: DataFrame, model=None, text_col: str = "text",
                       id_col: str = "doc_id") -> DataFrame:
-    """(id, n_bigrams, avg_logprob, ppl) per document with ≥1 bigram.
+    """(id, n_bigrams, avg_logprob, ppl) per document with ≥1 bigram: the
+    order-2 ``ngram_perplexity_scores``.
 
-    ``model`` is a (bigram_counts, context_counts, vocab_df) triple from
-    ``train_bigram_model``; None self-trains on ``docs`` (CCNet bootstrap).
-    """
-    bc, cc, vocab = model if model is not None else train_bigram_model(
-        docs, text_col, id_col)
-    big = bigram_stream(spread(docs), text_col, id_col)
-    lp = (
-        # left joins + coalesce-to-0: when scoring against an EXTERNAL model
-        # an unseen bigram/context backs off to the smoothed floor
-        # (0+1)/(0+V) instead of silently dropping the bigram; for the
-        # self-trained bootstrap every pair is present and this is an exact
-        # inner join
-        big.join(bc, on=["w1", "w2"], how="left")
-        .join(cc, on="w1", how="left")
-        .crossJoin(F.broadcast(vocab))
-        .withColumn("lp", F.log(
-            (F.coalesce(F.col("c12"), F.lit(0)) + 1)
-            / (F.coalesce(F.col("c1"), F.lit(0)) + F.col("vsz"))))
-    )
-    return (
-        lp.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
-            F.array_sort(F.collect_list(F.struct("pos", "lp"))).alias("ls"),
-        )
-        .select(
-            id_col, "n_bigrams",
-            F.aggregate(F.col("ls"), F.lit(0.0), lambda s, x: s + x["lp"]).alias("slp"),
-        )
-        .select(
-            id_col, "n_bigrams",
-            F.round(F.col("slp") / F.col("n_bigrams"), 6).alias("avg_logprob"),
-            F.round(F.exp(-(F.col("slp") / F.col("n_bigrams"))), 6).alias("ppl"),
-        )
-    )
+    ``model`` is a ``train_bigram_model`` triple; None self-trains on
+    ``docs`` (CCNet bootstrap)."""
+    return ngram_perplexity_scores(docs, 2, model, text_col, id_col) \
+        .withColumnRenamed("n_ngrams", "n_bigrams")
 
 
-# --- order-n generalization -------------------------------------------------
-# The bigram functions above stay the oracled surface; these generalize the
-# same distributed shape to any fixed order: the context key is the previous
-# n−1 tokens joined with an unprintable separator, so the count tables keep
-# the (context, word) equi-join shape whatever the order.
+# --- order-n model ------------------------------------------------------------
+# The context key is the previous n−1 tokens joined with an unprintable
+# separator, so the count tables keep the (context, word) equi-join shape
+# whatever the order.
 
 _CTX_SEP = "\x1f"
 
@@ -150,9 +98,9 @@ def ngram_stream(docs: DataFrame, order: int, text_col: str = "text",
 
 def train_ngram_model(docs: DataFrame, order: int = 3,
                       text_col: str = "text", id_col: str = "doc_id"):
-    """(ngram_counts (ctx, w, cnw), context_counts (ctx, cn), vocab_df) —
-    the add-one order-n model; same DataFrame-resident contract as the
-    bigram trainer."""
+    """Returns (ngram_counts, context_counts, vocab_size_df): the add-one
+    order-n model as DataFrames — (ctx, w, cnw), (ctx, cn), and a
+    single-row (vsz) frame for broadcast."""
     g = ngram_stream(spread(docs), order, text_col, id_col)
     nc = g.groupBy("ctx", "w").agg(F.count(F.lit(1)).cast("bigint").alias("cnw"))
     cc = g.groupBy("ctx").agg(F.count(F.lit(1)).cast("bigint").alias("cn"))
@@ -164,16 +112,19 @@ def train_ngram_model(docs: DataFrame, order: int = 3,
     return nc, cc, vocab
 
 
-def ngram_perplexity_scores(docs: DataFrame, order: int = 3, model=None,
-                            text_col: str = "text",
-                            id_col: str = "doc_id") -> DataFrame:
-    """Order-n mean log-prob + perplexity per document with ≥1 full window;
-    unseen (ctx, w) pairs back off to the smoothed floor like the bigram
-    scorer."""
+def _ngram_logprobs(docs: DataFrame, order: int, model, text_col: str,
+                    id_col: str) -> DataFrame:
+    """The corpus window stream with ``lp`` = the add-one smoothed
+    ``ln P(w|ctx) = ln((c(ctx,w)+1)/(c(ctx)+V))`` of each window.  ``model``
+    is a ``train_ngram_model`` triple; None self-trains on ``docs``."""
     nc, cc, vocab = model if model is not None else train_ngram_model(
         docs, order, text_col, id_col)
     g = ngram_stream(spread(docs), order, text_col, id_col)
-    lp = (
+    # left joins + coalesce-to-0: when scoring against an EXTERNAL model an
+    # unseen window/context backs off to the smoothed floor (0+1)/(0+V)
+    # instead of silently dropping the window; for the self-trained
+    # bootstrap every pair is present and this is an exact inner join
+    return (
         g.join(nc, on=["ctx", "w"], how="left")
         .join(cc, on="ctx", how="left")
         .crossJoin(F.broadcast(vocab))
@@ -181,6 +132,15 @@ def ngram_perplexity_scores(docs: DataFrame, order: int = 3, model=None,
             (F.coalesce(F.col("cnw"), F.lit(0)) + 1)
             / (F.coalesce(F.col("cn"), F.lit(0)) + F.col("vsz"))))
     )
+
+
+def ngram_perplexity_scores(docs: DataFrame, order: int = 3, model=None,
+                            text_col: str = "text",
+                            id_col: str = "doc_id") -> DataFrame:
+    """(id, n_ngrams, avg_logprob, ppl) per document with ≥1 full window:
+    the mean of the windows' ``lp`` folded in position order, and
+    ``ppl = exp(−mean)``."""
+    lp = _ngram_logprobs(docs, order, model, text_col, id_col)
     return (
         lp.groupBy(id_col)
         .agg(
@@ -242,20 +202,10 @@ def stupid_backoff_scores(train: DataFrame, score: DataFrame,
     tg = trigram_parts_stream(spread(train), text_col, id_col)
     c3 = tg.groupBy("w1", "w2", "w3").agg(
         F.count(F.lit(1)).cast("bigint").alias("c3"))
-    toks = (
-        train.where(F.col(text_col).isNotNull())
-        .select(F.col(id_col), tokens_col(F.col(text_col)).alias("tk"))
-        .withColumn("n", F.size("tk").cast("bigint"))
-    )
     bi = (
-        toks.where(F.col("n") >= 2)
-        .select(F.explode(F.transform(
-            F.sequence(F.lit(1), (F.col("n") - 1).cast("int")),
-            lambda i: F.struct(
-                F.element_at("tk", i.cast("int")).alias("a"),
-                F.element_at("tk", (i + 1).cast("int")).alias("b")),
-        )).alias("p"))
-        .groupBy("p.a", "p.b").agg(F.count(F.lit(1)).cast("bigint").alias("c2"))
+        bigram_stream(train, text_col, id_col)
+        .groupBy(F.col("w1").alias("a"), F.col("w2").alias("b"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c2"))
     )
     uni = (
         train.where(F.col(text_col).isNotNull())
@@ -461,16 +411,8 @@ def ccnet_chunk_buckets(docs: DataFrame, chunk_tokens: int = 16,
     ``global_dense_rank`` over corpus/chunk_tokens rows."""
     from ophidia_io_server_spark.operators.ranking import global_dense_rank
 
-    bc, cc, vocab = model if model is not None else train_bigram_model(
-        docs, text_col, id_col)
-    big = bigram_stream(spread(docs), text_col, id_col)
     lp = (
-        big.join(bc, on=["w1", "w2"], how="left")
-        .join(cc, on="w1", how="left")
-        .crossJoin(F.broadcast(vocab))
-        .withColumn("lp", F.log(
-            (F.coalesce(F.col("c12"), F.lit(0)) + 1)
-            / (F.coalesce(F.col("c1"), F.lit(0)) + F.col("vsz"))))
+        _ngram_logprobs(docs, 2, model, text_col, id_col)
         # a bigram is internal to its segment iff it does not straddle a
         # chunk boundary: tokens pos, pos+1 share (pos-1)//W
         .where(F.col("pos") % chunk_tokens != 0)

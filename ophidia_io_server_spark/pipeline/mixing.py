@@ -82,19 +82,7 @@ def temperature_sample(
     deterministic hash-Bernoulli keep at that source's ``target_rate``.
     Adds nothing and drops rows only — schema passes through."""
     plan = source_mixing_plan(docs, alpha, target_fraction, source_col)
-    # null-safe join: the plan counts a NULL-source stratum like any other
-    # (groupBy keeps the NULL group), so a plain inner join would silently
-    # drop those rows while their mass still skewed every weight
-    rates = F.broadcast(
-        plan.select(F.col(source_col).alias("__src"), "target_rate"))
-    withr = docs.join(
-        rates, docs[source_col].eqNullSafe(rates["__src"])).drop("__src")
-    # same bucket construction as sampling.hash_sample, rate per row; the
-    # 6-dp rate times 1e6 buckets is integral — F.round recovers it exactly
-    # (a bare cast would truncate 0.123456·1e6 = 123455.999… to 123455)
-    thresh = F.round(F.col("target_rate") * _BUCKETS).cast("bigint")
-    kept = withr.where(_bucket(F.col(key_col), seed) < thresh)
-    return kept.select(*docs.columns)
+    return temperature_mix_stream(docs, plan, source_col, key_col, seed)
 
 
 def temperature_mix_stream(
@@ -104,9 +92,10 @@ def temperature_mix_stream(
     key_col: str = "doc_id",
     seed: int = 0,
 ) -> DataFrame:
-    """The STREAMING form of ``temperature_sample``: apply a (static,
-    broadcast) per-source rate plan to documents as they land — a
-    stream-static inner join + the same deterministic hash-Bernoulli keep.
+    """Apply a (static, broadcast) per-source rate plan: a null-safe inner
+    join of the rates + the per-row deterministic hash-Bernoulli keep.
+    On a stream this is the STREAMING form of ``temperature_sample``, which
+    is this call on the batch corpus and its own plan.
 
     Because the selection of a row depends only on (its key hash, its
     source's rate) and never on other rows, incremental micro-batch
@@ -117,9 +106,15 @@ def temperature_mix_stream(
     which an unbounded stream cannot know mid-flight), refreshed between
     epochs by re-broadcasting.  Stateless: no state store, watermark-free,
     schema passes through."""
+    # null-safe join: the plan counts a NULL-source stratum like any other
+    # (groupBy keeps the NULL group), so a plain inner join would silently
+    # drop those rows while their mass still skewed every weight
     rates = F.broadcast(
         plan.select(F.col(source_col).alias("__src"), "target_rate"))
     withr = stream.join(
         rates, stream[source_col].eqNullSafe(rates["__src"])).drop("__src")
+    # same bucket construction as sampling.hash_sample, rate per row; the
+    # 6-dp rate times 1e6 buckets is integral — F.round recovers it exactly
+    # (a bare cast would truncate 0.123456·1e6 = 123455.999… to 123455)
     thresh = F.round(F.col("target_rate") * _BUCKETS).cast("bigint")
     return withr.where(_bucket(F.col(key_col), seed) < thresh).select(*stream.columns)

@@ -28,12 +28,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def train_pq(emb: DataFrame, m: int = 8, ncent: int = 16,
-             sample: int = 4096, iters: int = 10,
-             vec_col: str = "embedding") -> np.ndarray:
-    """Fit PQ codebooks.  Returns ``(m, ncent, d/m)`` float64 centroids."""
-    rows = (emb.select(vec_col).orderBy("vec_id").limit(sample).collect())
-    X = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
+def _sample_matrix(emb: DataFrame, sample: int, vec_col: str) -> np.ndarray:
+    """The deterministic training sample: the first ``sample`` vectors by
+    vec_id, as an (n, d) float64 matrix on the driver."""
+    rows = emb.select(vec_col).orderBy("vec_id").limit(sample).collect()
+    return np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
+
+
+def _lloyd(X: np.ndarray, k: int, iters: int) -> np.ndarray:
+    """``iters`` fixed Lloyd rounds on the rows of ``X`` from the first-k
+    init; empty clusters keep their centroid.  Returns (k, d) centroids."""
+    C = X[:k].copy()
+    for _ in range(iters):
+        a = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+        for c in range(k):
+            mask = a == c
+            if mask.any():
+                C[c] = X[mask].mean(axis=0)
+    return C
+
+
+def _pq_books(X: np.ndarray, m: int, ncent: int, iters: int) -> np.ndarray:
+    """One ``_lloyd`` codebook per subspace: ``(m, ncent, d/m)``."""
     n, d = X.shape
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -42,17 +58,15 @@ def train_pq(emb: DataFrame, m: int = 8, ncent: int = 16,
     dsub = d // m
     books = np.empty((m, ncent, dsub))
     for s in range(m):
-        Xs = X[:, s * dsub:(s + 1) * dsub]
-        C = Xs[:ncent].copy()          # deterministic init
-        for _ in range(iters):
-            d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            for c in range(ncent):     # empty clusters keep their centroid
-                mask = a == c
-                if mask.any():
-                    C[c] = Xs[mask].mean(axis=0)
-        books[s] = C
+        books[s] = _lloyd(X[:, s * dsub:(s + 1) * dsub], ncent, iters)
     return books
+
+
+def train_pq(emb: DataFrame, m: int = 8, ncent: int = 16,
+             sample: int = 4096, iters: int = 10,
+             vec_col: str = "embedding") -> np.ndarray:
+    """Fit PQ codebooks.  Returns ``(m, ncent, d/m)`` float64 centroids."""
+    return _pq_books(_sample_matrix(emb, sample, vec_col), m, ncent, iters)
 
 
 def pq_encode(emb: DataFrame, codebooks: np.ndarray,
@@ -78,6 +92,24 @@ def pq_encode(emb: DataFrame, codebooks: np.ndarray,
         return pd.Series([c.tolist() for c in codes])
 
     return emb.withColumn(code_col, enc(F.col(vec_col)))
+
+
+def _merge_topk(cand: DataFrame, k: int, dist_col: str) -> DataFrame:
+    """Merge per-batch ``(query_id, neighbor_id, dist_col)`` candidates into
+    the exact top-k per query — one bounded sorted aggregation keyed on
+    (distance rounded to 9 dp, neighbor id); rank 1 = nearest."""
+    return (
+        cand.groupBy("query_id")
+        .agg(F.slice(
+            F.array_sort(F.collect_list(
+                F.struct(F.round(dist_col, 9).alias("d"),
+                         F.col("neighbor_id").alias("nid")))),
+            1, k).alias("top"))
+        .select("query_id", F.posexplode("top").alias("pos", "t"))
+        .select("query_id", F.col("t.nid").alias("neighbor_id"),
+                (F.col("pos") + 1).cast("bigint").alias("rank"),
+                F.col("t.d").alias(dist_col))
+    )
 
 
 def pq_topk(emb: DataFrame, query_pred, codebooks: np.ndarray, k: int = 5,
@@ -132,18 +164,7 @@ def pq_topk(emb: DataFrame, query_pred, codebooks: np.ndarray, k: int = 5,
 
     cand = enc.mapInPandas(
         scan, "query_id long, neighbor_id long, approx_dist double")
-    return (
-        cand.groupBy("query_id")
-        .agg(F.slice(
-            F.array_sort(F.collect_list(
-                F.struct(F.round("approx_dist", 9).alias("d"),
-                         F.col("neighbor_id").alias("nid")))),
-            1, k).alias("top"))
-        .select("query_id", F.posexplode("top").alias("pos", "t"))
-        .select("query_id", F.col("t.nid").alias("neighbor_id"),
-                (F.col("pos") + 1).cast("bigint").alias("rank"),
-                F.col("t.d").alias("approx_dist"))
-    )
+    return _merge_topk(cand, k, "approx_dist")
 
 
 def exact_l2_topk(emb: DataFrame, query_pred, k: int = 5,
@@ -185,18 +206,7 @@ def exact_l2_topk(emb: DataFrame, query_pred, k: int = 5,
 
     cand = emb.select("vec_id", vec_col).mapInPandas(
         scan, "query_id long, neighbor_id long, dist double")
-    return (
-        cand.groupBy("query_id")
-        .agg(F.slice(
-            F.array_sort(F.collect_list(
-                F.struct(F.round("dist", 9).alias("d"),
-                         F.col("neighbor_id").alias("nid")))),
-            1, k).alias("top"))
-        .select("query_id", F.posexplode("top").alias("pos", "t"))
-        .select("query_id", F.col("t.nid").alias("neighbor_id"),
-                (F.col("pos") + 1).cast("bigint").alias("rank"),
-                F.col("t.d").alias("dist"))
-    )
+    return _merge_topk(cand, k, "dist")
 
 
 # -- IVF-PQ composite (coarse quantizer + PQ on residuals) -------------------
@@ -210,36 +220,12 @@ def train_ivfpq(emb: DataFrame, nlist: int = 8, m: int = 8, ncent: int = 16,
     residuals concentrate around 0, so the same code budget quantizes them
     far finer than raw vectors.  Returns ``(coarse (nlist, d), books)``.
     Same determinism contract as ``train_pq``."""
-    rows = emb.select(vec_col).orderBy("vec_id").limit(sample).collect()
-    X = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
-    n, d = X.shape
-    if n < nlist:
-        raise ValueError(f"sample {n} smaller than nlist={nlist}")
-    C = X[:nlist].copy()
-    for _ in range(iters):
-        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        a = d2.argmin(axis=1)
-        for c in range(nlist):
-            mask = a == c
-            if mask.any():
-                C[c] = X[mask].mean(axis=0)
+    X = _sample_matrix(emb, sample, vec_col)
+    if len(X) < nlist:
+        raise ValueError(f"sample {len(X)} smaller than nlist={nlist}")
+    C = _lloyd(X, nlist, iters)
     a = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    R = X - C[a]
-    dsub = d // m
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    books = np.empty((m, ncent, dsub))
-    for s in range(m):
-        Rs = R[:, s * dsub:(s + 1) * dsub]
-        B = Rs[:ncent].copy()
-        for _ in range(iters):
-            d2 = ((Rs[:, None, :] - B[None, :, :]) ** 2).sum(axis=2)
-            ra = d2.argmin(axis=1)
-            for c in range(ncent):
-                mask = ra == c
-                if mask.any():
-                    B[c] = Rs[mask].mean(axis=0)
-        books[s] = B
+    books = _pq_books(X - C[a], m, ncent, iters)
     return C, books
 
 
@@ -319,18 +305,7 @@ def ivfpq_topk(emb: DataFrame, query_pred, coarse: np.ndarray,
 
     cand = emb.select("vec_id", vec_col).mapInPandas(
         scan, "query_id long, neighbor_id long, approx_dist double")
-    return (
-        cand.groupBy("query_id")
-        .agg(F.slice(
-            F.array_sort(F.collect_list(
-                F.struct(F.round("approx_dist", 9).alias("d"),
-                         F.col("neighbor_id").alias("nid")))),
-            1, k).alias("top"))
-        .select("query_id", F.posexplode("top").alias("pos", "t"))
-        .select("query_id", F.col("t.nid").alias("neighbor_id"),
-                (F.col("pos") + 1).cast("bigint").alias("rank"),
-                F.col("t.d").alias("approx_dist"))
-    )
+    return _merge_topk(cand, k, "approx_dist")
 
 
 # -- OPQ: optimized product quantization (learned rotation) ------------------
@@ -347,28 +322,10 @@ def train_opq(emb: DataFrame, m: int = 8, ncent: int = 16,
     ``train_pq``.  Returns ``(R (d, d), books)``; encode/search run in the
     rotated space (rotation is one broadcast matmul — compose with
     ``transform_pca``-style application or ``opq_topk``)."""
-    rows = emb.select(vec_col).orderBy("vec_id").limit(sample).collect()
-    X = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
-    n, d = X.shape
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
+    X = _sample_matrix(emb, sample, vec_col)
+    d = X.shape[1]
     dsub = d // m
     R = np.eye(d)
-
-    def fit_books(Y):
-        books = np.empty((m, ncent, dsub))
-        for s in range(m):
-            Ys = Y[:, s * dsub:(s + 1) * dsub]
-            C = Ys[:ncent].copy()
-            for _ in range(iters_pq):
-                d2 = ((Ys[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-                a = d2.argmin(axis=1)
-                for c in range(ncent):
-                    mask = a == c
-                    if mask.any():
-                        C[c] = Ys[mask].mean(axis=0)
-            books[s] = C
-        return books
 
     def reconstruct(Y, books):
         out = np.empty_like(Y)
@@ -381,11 +338,11 @@ def train_opq(emb: DataFrame, m: int = 8, ncent: int = 16,
     books = None
     for _ in range(iters_opq):
         Y = X @ R
-        books = fit_books(Y)
+        books = _pq_books(Y, m, ncent, iters_pq)
         Yhat = reconstruct(Y, books)
         U, _, Vt = np.linalg.svd(X.T @ Yhat)
         R = U @ Vt
-    books = fit_books(X @ R)
+    books = _pq_books(X @ R, m, ncent, iters_pq)
     return R, books
 
 

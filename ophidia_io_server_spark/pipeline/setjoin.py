@@ -31,14 +31,12 @@ from pyspark.sql import functions as F
 from ophidia_io_server_spark.pin import pinned
 
 
-def prefix_jaccard_pairs(docs: DataFrame, threshold: float,
-                         text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
-    """All unordered (doc_a, doc_b, jaccard) pairs of distinct-token SETS
-    with Jaccard ≥ ``threshold`` — exact, via prefix filtering.
-
-    Jaccard is over DISTINCT whitespace tokens (set semantics, unlike the
-    shingle-multiset operators).  Docs with zero tokens never pair."""
+def _token_prefixes(docs: DataFrame, threshold: float, text_col: str,
+                    id_col: str) -> tuple[DataFrame, DataFrame]:
+    """``(tk, pref)``: the pinned distinct-token table ``(doc_id, token)``
+    and its prefix rows ``(doc_id, token, m)`` — each doc's first
+    ``|s| − ⌈τ·|s|⌉ + 1`` tokens in the global rarest-first order, with
+    ``m = |s|``."""
     if not (0 < threshold <= 1):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
 
@@ -68,7 +66,34 @@ def prefix_jaccard_pairs(docs: DataFrame, threshold: float,
     pref = ordered.where(
         F.col("r") <= F.col("m") - F.ceil(F.lit(threshold) * F.col("m"))
         + 1)
+    return tk, pref
 
+
+def _verified_overlaps(cand: DataFrame,
+                       tk: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(ov, sz)``: every candidate ``(doc_a, doc_b)`` pair with its exact
+    intersection size ``c = |a∩b|``, verified against the token table, and
+    ``ma = |a|``; plus the per-doc set sizes ``(doc_id, m)``."""
+    sz = tk.groupBy("doc_id").agg(F.count(F.lit(1)).alias("m"))
+    ta = tk.select(F.col("doc_id").alias("doc_a"), "token")
+    tb = tk.select(F.col("doc_id").alias("doc_b"), "token")
+    inter = (cand.join(ta, "doc_a").join(tb, ["doc_b", "token"])
+             .groupBy("doc_a", "doc_b")
+             .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
+    ov = inter.join(sz.select(F.col("doc_id").alias("doc_a"),
+                              F.col("m").alias("ma")), "doc_a")
+    return ov, sz
+
+
+def prefix_jaccard_pairs(docs: DataFrame, threshold: float,
+                         text_col: str = "text",
+                         id_col: str = "doc_id") -> DataFrame:
+    """All unordered (doc_a, doc_b, jaccard) pairs of distinct-token SETS
+    with Jaccard ≥ ``threshold`` — exact, via prefix filtering.
+
+    Jaccard is over DISTINCT whitespace tokens (set semantics, unlike the
+    shingle-multiset operators).  Docs with zero tokens never pair."""
+    tk, pref = _token_prefixes(docs, threshold, text_col, id_col)
     a = pref.select(F.col("doc_id").alias("doc_a"), "token",
                     F.col("m").alias("ma"))
     b = pref.select(F.col("doc_id").alias("doc_b"), "token",
@@ -80,15 +105,8 @@ def prefix_jaccard_pairs(docs: DataFrame, threshold: float,
                    & (F.col("ma") * F.lit(threshold) <= F.col("mb")))
             .select("doc_a", "doc_b").distinct())
 
-    sz = tk.groupBy("doc_id").agg(F.count(F.lit(1)).alias("m"))
-    ta = tk.select(F.col("doc_id").alias("doc_a"), "token")
-    tb = tk.select(F.col("doc_id").alias("doc_b"), "token")
-    inter = (cand.join(ta, "doc_a").join(tb, ["doc_b", "token"])
-             .groupBy("doc_a", "doc_b")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
-    return (inter
-            .join(sz.select(F.col("doc_id").alias("doc_a"),
-                            F.col("m").alias("ma")), "doc_a")
+    ov, sz = _verified_overlaps(cand, tk)
+    return (ov
             .join(sz.select(F.col("doc_id").alias("doc_b"),
                             F.col("m").alias("mb")), "doc_b")
             .withColumn("jaccard",
@@ -121,27 +139,7 @@ def containment_pairs(docs: DataFrame, threshold: float,
     rarest-first prefix order on a (documented asymmetry — the heaviest
     tokens still enter b's index; a hot token is b-side fan-out).  No
     all-pairs stage; verification is candidate-bounded."""
-    if not (0 < threshold <= 1):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-
-    tk = (docs.where(F.col(text_col).isNotNull())
-          .select(F.col(id_col).alias("doc_id"),
-                  F.explode(F.array_distinct(
-                      F.filter(F.split(F.col(text_col), " "),
-                               lambda w: w != ""))).alias("token")))
-    tk = pinned(tk, "containment token table: freq agg + prefix + verify")
-
-    freq = tk.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    ordered = (tk.join(freq, "token")  # vocabulary-sized: no broadcast hint
-               .withColumn("m", F.count(F.lit(1)).over(
-                   Window.partitionBy("doc_id")))
-               .withColumn("r", F.row_number().over(
-                   Window.partitionBy("doc_id")
-                   .orderBy(F.col("cnt").asc(), F.col("token").asc()))))
-    pref = ordered.where(
-        F.col("r") <= F.col("m") - F.ceil(F.lit(threshold) * F.col("m"))
-        + 1)
-
+    tk, pref = _token_prefixes(docs, threshold, text_col, id_col)
     a = pref.select(F.col("doc_id").alias("doc_a"), "token",
                     F.col("m").alias("ma"))
     b = tk.select(F.col("doc_id").alias("doc_b"), "token")
@@ -149,15 +147,8 @@ def containment_pairs(docs: DataFrame, threshold: float,
             .where(F.col("doc_a") != F.col("doc_b"))
             .select("doc_a", "doc_b").distinct())
 
-    sz = tk.groupBy("doc_id").agg(F.count(F.lit(1)).alias("m"))
-    ta = tk.select(F.col("doc_id").alias("doc_a"), "token")
-    tb = tk.select(F.col("doc_id").alias("doc_b"), "token")
-    inter = (cand.join(ta, "doc_a").join(tb, ["doc_b", "token"])
-             .groupBy("doc_a", "doc_b")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("c")))
-    return (inter
-            .join(sz.select(F.col("doc_id").alias("doc_a"),
-                            F.col("m").alias("ma")), "doc_a")
+    ov, _ = _verified_overlaps(cand, tk)
+    return (ov
             .withColumn("containment", F.col("c") / F.col("ma"))
             .where(F.col("containment") >= threshold)
             .select("doc_a", "doc_b",

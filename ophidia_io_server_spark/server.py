@@ -80,9 +80,11 @@ class _Handler(socketserver.StreamRequestHandler):
             sc.setJobGroup(f"oph-io:{peer_port}:{n}", query[:120])
             try:
                 params = self._read_binds()
-                # catalog mutations are driver-side dict ops — serialize them
-                # (≙ the reference's MetaDB rwlock); Spark jobs themselves are
-                # thread-safe and run outside the lock via the returned plan
+                # serialize execute (≙ the reference's MetaDB rwlock): catalog
+                # mutations are driver-side dict ops.  A returned plan runs
+                # outside the lock, but oph_size, sequential_ids (subset and
+                # CTAS), assert_dense_ids and oph_export_nc run eager Spark
+                # jobs inside execute, so they hold the lock while they run
                 with lock:
                     df = srv.execute(query, params=params)
                 # pull the FIRST packet before emitting the 'K' status byte:

@@ -348,15 +348,16 @@ def write_classic(path: str, dims: list[tuple[str, int]],
 # ---------------------------------------------------------------------------
 
 
-def export_fragment_nc(df, path: str, var: str = "m") -> int:
-    """Export a fragment (id_dim long, measure double[]) to ONE classic
-    NetCDF file: dims (id_dim: nrows, array: maxlen), short rows NaN-padded.
-
-    Driver-side collect — the single-file parity surface (the reference's
-    export is likewise one server writing one fragment).  For cluster-scale
-    exports use ``export_fragment_nc_sharded``: one file per partition,
-    written BY the executors, no driver bottleneck."""
-    rows = sorted((r[0], list(r[1] or [])) for r in df.select("id_dim", "measure").collect())
+def _write_fragment_file(path: str, rows: list, var: str) -> None:
+    """Write id-sorted ``(id_dim, measure list)`` rows as one classic file:
+    dims (id_dim: nrows, array: maxlen), short rows NaN-padded.  The file's
+    id variable is int32, so an id outside its range raises ``ValueError``
+    instead of being written wrapped."""
+    lo, hi = np.iinfo(np.int32).min, np.iinfo(np.int32).max
+    bad = next((rid for rid, _ in rows if not lo <= rid <= hi), None)
+    if bad is not None:
+        raise ValueError(f"id_dim {bad} does not fit the int32 id variable "
+                         f"of a classic NetCDF export")
     n = len(rows)
     width = max((len(m) for _, m in rows), default=0)
     data = np.full((n, width), np.nan, dtype=np.float64)
@@ -370,7 +371,19 @@ def export_fragment_nc(df, path: str, var: str = "m") -> int:
         variables={var: (["id_dim", "array"], data),
                    "id_dim": (["id_dim"], ids)},
     )
-    return n
+
+
+def export_fragment_nc(df, path: str, var: str = "m") -> int:
+    """Export a fragment (id_dim long, measure double[]) to ONE classic
+    NetCDF file: dims (id_dim: nrows, array: maxlen), short rows NaN-padded.
+
+    Driver-side collect — the single-file parity surface (the reference's
+    export is likewise one server writing one fragment).  For cluster-scale
+    exports use ``export_fragment_nc_sharded``: one file per partition,
+    written BY the executors, no driver bottleneck."""
+    rows = sorted((r[0], list(r[1] or [])) for r in df.select("id_dim", "measure").collect())
+    _write_fragment_file(path, rows, var)
+    return len(rows)
 
 
 def export_fragment_nc_sharded(df, out_dir: str, var: str = "m") -> int:
@@ -394,19 +407,8 @@ def export_fragment_nc_sharded(df, out_dir: str, var: str = "m") -> int:
         rows = sorted((int(r["id_dim"]), list(r["measure"] or [])) for r in it)
         if not rows:
             return iter(())
-        n = len(rows)
-        width = max(len(m) for _, m in rows)
-        data = np.full((n, width), np.nan, dtype=np.float64)
-        ids = np.empty((n,), dtype=np.int32)
-        for i, (rid, m) in enumerate(rows):
-            ids[i] = rid
-            data[i, : len(m)] = m
-        write_classic(
-            os.path.join(out_dir, f"part-{pid:05d}.nc"),
-            dims=[("id_dim", n), ("array", width)],
-            variables={var: (["id_dim", "array"], data),
-                       "id_dim": (["id_dim"], ids)},
-        )
+        _write_fragment_file(os.path.join(out_dir, f"part-{pid:05d}.nc"),
+                             rows, var)
         return iter((1,))
 
     shards = (

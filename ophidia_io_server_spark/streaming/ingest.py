@@ -182,21 +182,24 @@ def user_running_stats_stream(events: DataFrame, watermark: str = "2 hours") -> 
 
 def stream_stream_attribution(views: DataFrame, purchases: DataFrame,
                               window_minutes: int = 120,
-                              watermark: str = "4 hours") -> DataFrame:
-    """Watermarked STREAM-STREAM inner join: each purchase joined to the
-    same user's view events in the preceding ``window_minutes``.
+                              watermark: str = "4 hours",
+                              how: str = "inner") -> DataFrame:
+    """Watermarked STREAM-STREAM join: each purchase joined to the same
+    user's view events in the preceding ``window_minutes``.
 
-    This is Spark's canonical bounded-state stream-stream join: both
-    inputs are watermarked and the join condition carries an explicit
-    event-time range, so the state store can evict a buffered view row as
-    soon as the purchase-side watermark passes ``v_ts + window`` (and
-    vice versa) — state is O(events inside the watermark horizon), not
-    O(stream length).  Output mode must be ``append`` (stream-stream
-    joins emit a pair exactly once, when both sides have arrived).
+    Both inputs are watermarked and the join condition carries an explicit
+    event-time range, so the state store evicts a buffered row once the
+    opposite side's watermark passes its join horizon — state is
+    O(watermark horizon), not O(stream length).  Output mode is
+    ``append``.  ``how="leftOuter"`` also emits each unmatched purchase,
+    NULL-extended, but only in the state-eviction pass that runs a batch
+    AFTER the watermark passes ``p_ts + window``: a drained availableNow
+    stream needs events past that horizon to flush the unmatched tail
+    (``stream_view_attribution_outer`` stages a sentinel batch for it).
 
-    The batch twin is the identical join on static DataFrames; the
-    correctness gate asserts the drained stream result set-equals the
-    batch result (``workload.stream_view_attribution``)."""
+    ``withWatermark`` is a no-op on static DataFrames, so the same call on
+    the batch table is the twin the ``stream_view_attribution`` workloads
+    certify the drained stream against."""
     v = views.withWatermark("ts", watermark).select(
         F.col("event_id").alias("v_event_id"),
         F.col("user_id").alias("v_user"),
@@ -213,7 +216,7 @@ def stream_stream_attribution(views: DataFrame, purchases: DataFrame,
         & (F.col("v_ts") <= F.col("p_ts"))
         & (F.col("v_ts") > F.col("p_ts")
            - F.expr(f"INTERVAL {int(window_minutes)} MINUTES")),
-        "inner",
+        how,
     ).drop("v_user")
 
 
@@ -280,44 +283,6 @@ def user_inactivity_closeout_stream(events: DataFrame,
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-
-def stream_stream_attribution_outer(views: DataFrame, purchases: DataFrame,
-                                    window_minutes: int = 120,
-                                    watermark: str = "4 hours") -> DataFrame:
-    """LEFT-OUTER watermarked stream-stream join: every purchase emits —
-    joined to the user's prior-window views when they exist, NULL-extended
-    when they don't.
-
-    The semantics corner beyond the inner join
-    (``stream_stream_attribution``): a NULL-extended result can only be
-    emitted once the engine PROVES no match can still arrive — i.e. when
-    the watermark passes ``p_ts + window`` — and that proof materializes
-    during state eviction, which runs a batch AFTER the watermark
-    advances.  A drained availableNow stream therefore needs events past
-    the horizon (two trailing micro-batches) to flush the unmatched tail;
-    the ``stream_view_attribution_outer`` workload stages two sentinel
-    batches for exactly this, and its stream≡batch certificate binds the
-    NULL rows too, not just the matches.  State is the same
-    O(watermark horizon) as the inner join."""
-    v = views.withWatermark("ts", watermark).select(
-        F.col("event_id").alias("v_event_id"),
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("v_ts"),
-    )
-    p = purchases.withWatermark("ts", watermark).select(
-        F.col("event_id").alias("p_event_id"),
-        F.col("user_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    return p.join(
-        v,
-        (F.col("v_user") == F.col("user_id"))
-        & (F.col("v_ts") <= F.col("p_ts"))
-        & (F.col("v_ts") > F.col("p_ts")
-           - F.expr(f"INTERVAL {int(window_minutes)} MINUTES")),
-        "leftOuter",
-    ).drop("v_user")
 
 
 def _drain(q, timeout_sec: int) -> None:

@@ -533,13 +533,12 @@ def stream_curation_recipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the batch rule/redaction oracles over distinct texts.  The
     oracle REUSES the `curation_quality_rules` SQL mirror verbatim over
     the deduplicated CTE (one source of truth for the rule algebra)."""
-    import hashlib
     import os
 
     from ophidia_io_server_spark.pipeline.recipe import curate_stream
     from ophidia_io_server_spark.streaming.ingest import run_available_now
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = _corpus_tag(sf_dir, "documents")
     path = f"/tmp/ophidia_stream_docs_{tag}"
     if not os.path.exists(f"{path}/_SUCCESS"):
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -801,7 +800,6 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the true corpus top-10.  A regenerated corpus with a flatter tail
     flips this boolean (one named row) instead of nondeterministically
     scrambling the top-10 hash."""
-    import hashlib
     import os
 
     from ophidia_io_server_spark.streaming.ingest import (
@@ -1552,7 +1550,6 @@ def stream_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     property that lets an epoch's mix be applied on the fly; (b)
     ``rate_ok``: selection lands inside the 4σ binomial envelope of the
     SQL-mirrored plan rates."""
-    import hashlib
     import os
 
     from ophidia_io_server_spark.pipeline.mixing import (
@@ -3130,6 +3127,46 @@ def events_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
                             / F.sqrt(n0x * n0y), 6).alias("tau_b")))
 
 
+def _first_purchase_risk_table(spark: SparkSession,
+                               sf_dir: str) -> DataFrame:
+    """The right-censored time-to-first-purchase risk table shared by the
+    Kaplan-Meier and Nelson-Aalen rows: the observation window is the
+    corpus's first 96 hours; a user converting inside it is an event at
+    duration (first purchase - first event) in whole hours, a user never
+    purchasing inside it is censored at their last observed event.  One
+    row per distinct duration: (dur_h, d events, c censored, n_risk =
+    subjects with duration >= dur_h — censored-at-t still at risk)."""
+    from pyspark.sql import Window
+
+    ev = load_table(spark, sf_dir, "events")
+    wend = ev.agg((F.min("ts") + F.expr("INTERVAL 96 HOURS")).alias("wend"))
+    e = (ev.crossJoin(F.broadcast(wend))  # scalar observation-window bound
+         .where(F.col("ts") < F.col("wend")))
+    pu = e.groupBy("user_id").agg(
+        F.min("ts").alias("t0"), F.max("ts").alias("tl"),
+        F.min(F.when(F.col("event_type") == "purchase",
+                     F.col("ts"))).alias("tp"))
+    u = pu.select(
+        # ts is TIMESTAMP_NTZ; session tz is pinned UTC so the cast is a
+        # value-preserving re-tag
+        F.expr("(unix_micros(cast(coalesce(tp, tl) as timestamp))"
+               " - unix_micros(cast(t0 as timestamp))) div 3600000000")
+        .alias("dur_h"),
+        F.when(F.col("tp").isNull(), 1).otherwise(0).alias("cens"))
+    g = (u.groupBy("dur_h")
+         .agg(F.sum(1 - F.col("cens")).cast("bigint").alias("d"),
+              F.sum("cens").cast("bigint").alias("c")))
+    w_all = Window.orderBy("dur_h").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing)
+    w_prev = Window.orderBy("dur_h").rowsBetween(
+        Window.unboundedPreceding, -1)
+    return g.withColumn(
+        "n_risk",
+        (F.sum(F.col("d") + F.col("c")).over(w_all)
+         - F.coalesce(F.sum(F.col("d") + F.col("c")).over(w_prev),
+                      F.lit(0))).cast("bigint"))
+
+
 @workload(
     "events_kaplan_meier",
     oracle="""
@@ -3175,13 +3212,9 @@ def events_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival estimator for time-to-first-purchase with
-    RIGHT CENSORING (the churn / conversion-lifetime primitive): the
-    observation window is the corpus's first 96 hours; a user converting
-    inside it is an event at duration (first purchase - first event) in
-    whole hours, a user never purchasing inside it is censored at their
-    last observed event.  Per distinct event time: n_risk (subjects with
-    duration >= t; censored-at-t still at risk, the standard convention),
-    d events, c censored, and S(t) = prod(1 - d_j/n_j) over event times
+    RIGHT CENSORING (the churn / conversion-lifetime primitive) over the
+    ``_first_purchase_risk_table``: per distinct event time n_risk, d
+    events, c censored, and S(t) = prod(1 - d_j/n_j) over event times
     j <= t.  Each factor is ONE IEEE divide of two exact integers and the
     product is a seeded LEFT FOLD (``F.aggregate`` <-> ``list_reduce``)
     over the identical factor sequence — bitwise cross-engine, rounded 6.
@@ -3193,33 +3226,7 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows are over that structurally bounded series."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    wend = ev.agg((F.min("ts") + F.expr("INTERVAL 96 HOURS")).alias("wend"))
-    e = (ev.crossJoin(F.broadcast(wend))  # scalar observation-window bound
-         .where(F.col("ts") < F.col("wend")))
-    pu = e.groupBy("user_id").agg(
-        F.min("ts").alias("t0"), F.max("ts").alias("tl"),
-        F.min(F.when(F.col("event_type") == "purchase",
-                     F.col("ts"))).alias("tp"))
-    u = pu.select(
-        # ts is TIMESTAMP_NTZ; session tz is pinned UTC so the cast is a
-        # value-preserving re-tag
-        F.expr("(unix_micros(cast(coalesce(tp, tl) as timestamp))"
-               " - unix_micros(cast(t0 as timestamp))) div 3600000000")
-        .alias("dur_h"),
-        F.when(F.col("tp").isNull(), 1).otherwise(0).alias("cens"))
-    g = (u.groupBy("dur_h")
-         .agg(F.sum(1 - F.col("cens")).cast("bigint").alias("d"),
-              F.sum("cens").cast("bigint").alias("c")))
-    w_all = Window.orderBy("dur_h").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-    w_prev = Window.orderBy("dur_h").rowsBetween(
-        Window.unboundedPreceding, -1)
-    r = g.withColumn(
-        "n_risk",
-        (F.sum(F.col("d") + F.col("c")).over(w_all)
-         - F.coalesce(F.sum(F.col("d") + F.col("c")).over(w_prev),
-                      F.lit(0))).cast("bigint"))
+    r = _first_purchase_risk_table(spark, sf_dir)
     w_cur = Window.orderBy("dur_h").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
     evt = (r.where(F.col("d") > 0)
@@ -4641,31 +4648,7 @@ def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     observation-window-bounded series math (≤97 rows here)."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    wend = ev.agg((F.min("ts") + F.expr("INTERVAL 96 HOURS")).alias("wend"))
-    e = (ev.crossJoin(F.broadcast(wend))
-         .where(F.col("ts") < F.col("wend")))
-    pu = e.groupBy("user_id").agg(
-        F.min("ts").alias("t0"), F.max("ts").alias("tl"),
-        F.min(F.when(F.col("event_type") == "purchase",
-                     F.col("ts"))).alias("tp"))
-    u = pu.select(
-        F.expr("(unix_micros(cast(coalesce(tp, tl) as timestamp))"
-               " - unix_micros(cast(t0 as timestamp))) div 3600000000")
-        .alias("dur_h"),
-        F.when(F.col("tp").isNull(), 1).otherwise(0).alias("cens"))
-    g = (u.groupBy("dur_h")
-         .agg(F.sum(1 - F.col("cens")).cast("bigint").alias("d"),
-              F.sum("cens").cast("bigint").alias("c")))
-    w_all = Window.orderBy("dur_h").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-    w_prev = Window.orderBy("dur_h").rowsBetween(
-        Window.unboundedPreceding, -1)
-    r = g.withColumn(
-        "n_risk",
-        (F.sum(F.col("d") + F.col("c")).over(w_all)
-         - F.coalesce(F.sum(F.col("d") + F.col("c")).over(w_prev),
-                      F.lit(0))).cast("bigint"))
+    r = _first_purchase_risk_table(spark, sf_dir)
     w_cur = Window.orderBy("dur_h").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
     evt = (r.where(F.col("d") > 0)

@@ -1622,13 +1622,12 @@ def stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged corpus); the unbounded-stream variant is
     ``streaming/ingest.stateful_dedup_stream`` (watermark-bounded state),
     exercised by the events streaming rows."""
-    import hashlib
     import os
 
     from ophidia_io_server_spark.pipeline.text import token_count_col
     from ophidia_io_server_spark.streaming.ingest import run_available_now
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = _corpus_tag(sf_dir, "documents")
     path = f"/tmp/ophidia_stream_docs_{tag}"
     if not os.path.exists(f"{path}/_SUCCESS"):
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")

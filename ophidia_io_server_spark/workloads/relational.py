@@ -1687,7 +1687,7 @@ def stream_view_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exercised in tests/test_streaming.py with a horizon-covering
     watermark) and checked two ways: the oracle's inequality join, and
     the ``stream_equals_batch`` boolean asserting the drained stream
-    result set-equals the identical batch-plan join."""
+    result set-equals the same join called on the static table."""
     from ophidia_io_server_spark.streaming.ingest import (
         events_stream,
         run_available_now,
@@ -1707,18 +1707,10 @@ def stream_view_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed = run_available_now(joined, f"stream_ss_attr_{tag}",
                                output_mode="append")
     ev = load_table(spark, sf_dir, "events")
-    bv = ev.where(F.col("event_type") == "view").select(
-        F.col("event_id").alias("v_event_id"),
-        F.col("user_id").alias("v_user"), F.col("ts").alias("v_ts"))
-    bp = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_event_id"), "user_id",
-        F.col("ts").alias("p_ts"))
-    batch = bp.join(
-        bv,
-        (F.col("v_user") == F.col("user_id"))
-        & (F.col("v_ts") <= F.col("p_ts"))
-        & (F.col("v_ts") > F.col("p_ts") - F.expr("INTERVAL 120 MINUTES")),
-        "inner",
+    batch = stream_stream_attribution(
+        ev.where(F.col("event_type") == "view"),
+        ev.where(F.col("event_type") == "purchase"),
+        window_minutes=120, watermark="4 hours",
     ).select("p_event_id", "v_event_id", "user_id", "p_ts", "v_ts")
     got = landed.select("p_event_id", "v_event_id", "user_id", "p_ts", "v_ts")
     # call-invariant per session (memoized staged input, deterministic

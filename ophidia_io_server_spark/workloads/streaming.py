@@ -45,7 +45,8 @@ from ophidia_io_server_spark.workloads.base import (  # noqa: F401
 def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage events as a multi-file micros-timestamp parquet directory (the
     driver testdata is TIMESTAMP(NANOS), which a file-source stream schema
-    cannot bind).  Deterministic per sf_dir; written once per session.
+    cannot bind).  Keyed on the source parquet's identity
+    (``_corpus_tag``), so a regenerated table is staged again.
 
     TWO files (r14, verdict item 2): the file count sets the data
     micro-batch count for the maxFilesPerTrigger=1 consumers
@@ -61,10 +62,9 @@ def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
     (scripts/r14_stream_batchcount_probe.py).  The single-batch
     consumers (hourly/session/hopping/ohlc/psi) read the whole
     directory in one batch regardless of file count."""
-    import hashlib
     import os
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = _corpus_tag(sf_dir, "events")
     # path suffix versions the staging layout: a stale 4-file dir from a
     # previous session must not silently set the batch count
     path = f"/tmp/ophidia_stream_events_{tag}_f2"
@@ -92,13 +92,12 @@ def _staged_events_outer_dir(spark: SparkSession, sf_dir: str) -> str:
     2-sentinel stagings drain BITWISE-identical results on all three
     consumers (scripts/r14_stream_batchcount_probe.py), and every
     consumer's ``stream_equals_batch`` certificate re-proves the
-    eviction fired on every run.  Deterministic per sf_dir."""
-    import hashlib
+    eviction fired on every run.  Keyed on the source parquet's identity."""
     import os
     import time as _time
     from datetime import timedelta
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = _corpus_tag(sf_dir, "events")
     # path suffix versions the staging layout (stale 2-sentinel dirs from
     # a previous session must not add a batch back)
     path = f"/tmp/ophidia_stream_events_outer_{tag}_s1"
@@ -153,28 +152,28 @@ def _staged_events_outer_dir(spark: SparkSession, sf_dir: str) -> str:
 def stream_view_attribution_outer(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """LEFT-OUTER watermarked stream-stream join
-    (``streaming/ingest.py::stream_stream_attribution_outer``): every
-    purchase emits — matched to prior-2h views or NULL-extended once the
-    watermark PROVES no view can still arrive.  The drain stages one
+    (``streaming/ingest.py::stream_stream_attribution`` with
+    ``how="leftOuter"``): every purchase emits — matched to prior-2h views
+    or NULL-extended once the watermark PROVES no view can still arrive.  The drain stages one
     trailing sentinel micro-batch (``_staged_events_outer_dir``) to
     advance the watermark; the NULL rows materialize in the state-
     eviction pass of the no-data batch AFTER it — the semantics corner
     that distinguishes outer from inner stream-stream joins.  Checked two
     ways: the oracle's batch LEFT JOIN, and ``stream_equals_batch``
-    asserting the drained stream set-equals the identical batch plan
-    INCLUDING the NULL-extended rows."""
+    asserting the drained stream set-equals the same join called on the
+    static table, INCLUDING the NULL-extended rows."""
     from ophidia_io_server_spark.streaming.ingest import (
         events_stream,
         run_available_now,
-        stream_stream_attribution_outer,
+        stream_stream_attribution,
     )
 
     path = _staged_events_outer_dir(spark, sf_dir)
     src = events_stream(spark, path, max_files_per_trigger=1)
-    joined = stream_stream_attribution_outer(
+    joined = stream_stream_attribution(
         src.where(F.col("event_type") == "view"),
         src.where(F.col("event_type") == "purchase"),
-        window_minutes=120, watermark="4 hours",
+        window_minutes=120, watermark="4 hours", how="leftOuter",
     )
     import hashlib
 
@@ -182,18 +181,10 @@ def stream_view_attribution_outer(spark: SparkSession,
     landed = run_available_now(joined, f"stream_ss_attr_outer_{tag}",
                                output_mode="append")
     ev = load_table(spark, sf_dir, "events")
-    bv = ev.where(F.col("event_type") == "view").select(
-        F.col("event_id").alias("v_event_id"),
-        F.col("user_id").alias("v_user"), F.col("ts").alias("v_ts"))
-    bp = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_event_id"), "user_id",
-        F.col("ts").alias("p_ts"))
-    batch = bp.join(
-        bv,
-        (F.col("v_user") == F.col("user_id"))
-        & (F.col("v_ts") <= F.col("p_ts"))
-        & (F.col("v_ts") > F.col("p_ts") - F.expr("INTERVAL 120 MINUTES")),
-        "leftOuter",
+    batch = stream_stream_attribution(
+        ev.where(F.col("event_type") == "view"),
+        ev.where(F.col("event_type") == "purchase"),
+        window_minutes=120, watermark="4 hours", how="leftOuter",
     ).select("p_event_id", "v_event_id", "user_id", "p_ts", "v_ts")
     out = (landed.where(F.col("user_id") >= 0)  # drop the sentinel purchase
            .select("p_event_id", "v_event_id", "user_id", "p_ts", "v_ts"))
@@ -313,7 +304,6 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Merged r3 with stream_to_dialect (full loop: Structured-Streaming ingest
     → catalog fragment via foreachBatch ≙ multi-run insert → dialect select
     over the stored fragment); the two 1-row summaries cross-join into one."""
-    import hashlib
     import os
 
     from ophidia_io_server_spark.streaming.ingest import (
@@ -323,12 +313,16 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_insert_fragment,
     )
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = _corpus_tag(sf_dir, "events")
     path = f"/tmp/ophidia_stream_dup_{tag}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
+    # the first (overwrite) write already leaves a _SUCCESS, so the staging
+    # is complete only once the marker written after the append exists
+    marker = f"{path}/_STAGED_DUP"
+    if not os.path.exists(marker):
         ev = load_table(spark, sf_dir, "events")
         ev.repartition(2).write.mode("overwrite").parquet(path)
         ev.repartition(3).write.mode("append").parquet(path)
+        open(marker, "a").close()
     deduped = stateful_dedup_stream(events_stream(spark, path))
     res = run_available_now(deduped, "events_dedup_result", output_mode="append")
     dedup_row = res.agg(

@@ -127,19 +127,15 @@ def main() -> None:
     # pass.  The horizon-covering watermark means NULL rows never
     # materialize inside the probe window — deliberate: the marginal here
     # is the join/state cost, the gate row binds the NULL semantics.
-    from ophidia_io_server_spark.streaming.ingest import (
-        stream_stream_attribution_outer,
-    )
-
     src2 = (spark.readStream
             .schema("event_id long, user_id long, event_type string, "
                     "ts timestamp")
             .option("maxFilesPerTrigger", 1)
             .parquet(epath + "/_b=*"))
-    outer = stream_stream_attribution_outer(
+    outer = stream_stream_attribution(
         src2.where(F.col("event_type") == "view"),
         src2.where(F.col("event_type") == "purchase"),
-        window_minutes=120, watermark="3650 days",
+        window_minutes=120, watermark="3650 days", how="leftOuter",
     )
     q = (outer.writeStream.format("noop")
          .option("checkpointLocation", "/tmp/steady_probe_ckpt_outer")

@@ -217,6 +217,34 @@ def test_export_sharded_reimports_to_same_fragment(spark, tmp_path):
     assert sorted(got) == [(i, m) for i, m in rows]
 
 
+@pytest.mark.parametrize("sharded", [False, True])
+def test_export_rejects_id_outside_int32(spark, tmp_path, sharded):
+    """The file stores id_dim as int32: an id of 2**31 must raise, naming
+    the id, instead of being written as -2**31 (numpy only warns on the
+    out-of-range assignment and wraps it)."""
+    import os
+
+    from ophidia_io_server_spark.sources.netcdf_classic import (
+        export_fragment_nc,
+        export_fragment_nc_sharded,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [1.0]), (2**31, [2.0]), (2**31 + 5, [3.0])],
+        "id_dim long, measure array<double>")
+    out = str(tmp_path / "big")
+    if sharded:
+        # the two large ids may land in different shards; either task's
+        # error may surface first
+        with pytest.raises(Exception, match=r"id_dim 21474836(48|53) does not fit"):
+            export_fragment_nc_sharded(df, out)
+    else:
+        # the first out-of-range id in id order is named
+        with pytest.raises(ValueError, match="id_dim 2147483648 does not fit"):
+            export_fragment_nc(df, out)
+        assert not os.path.exists(out)
+
+
 def test_engine_export_nc_procedure(spark, tmp_path):
     from ophidia_io_server_spark.operators.engine import IOServer
     from ophidia_io_server_spark.sources.netcdf_classic import ClassicReader

@@ -86,6 +86,36 @@ def test_catalog_restore_missing(spark):
         Catalog.restore(spark, "/tmp/definitely_not_a_catalog_dir_xyz")
 
 
+def test_failed_persist_keeps_last_snapshot(spark, tmp_path):
+    """A fragment whose write fails must leave the previous snapshot whole:
+    the error propagates, restore returns the first snapshot's fragments
+    and rows, and no temp directory is left next to the root."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "cat")
+    srv = IOServer(spark)
+    srv.catalog.put("a", random_fragment(spark, 20, 3), cache=False)
+    srv.catalog.put("b", random_fragment(spark, 10, 2), cache=False)
+    assert sorted(srv.catalog.persist(root)) == ["default.a", "default.b"]
+    want = {n: sorted(Catalog.restore(spark, root, cache=False).df(n).collect())
+            for n in ("a", "b")}
+
+    bad = random_fragment(spark, 20, 3).withColumn(
+        "measure", F.when(F.col("id_dim") > 0,
+                          F.raise_error(F.lit("fragment write failed")))
+        .otherwise(F.col("measure")))
+    srv.catalog.put("a", bad, cache=False, overwrite=True)
+    with pytest.raises(Exception, match="fragment write failed"):
+        srv.catalog.persist(root)
+
+    cat2 = Catalog.restore(spark, root, cache=False)
+    assert cat2.list_fragments("default") == ["a", "b"]
+    assert {n: sorted(cat2.df(n).collect()) for n in ("a", "b")} == want
+    assert sorted(os.listdir(tmp_path)) == ["cat"]
+
+
 def test_persist_layout_enables_id_skipping(spark):
     root = tempfile.mkdtemp(prefix="ophidia_cat_layout_")
     try:

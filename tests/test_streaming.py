@@ -233,7 +233,7 @@ def test_outer_join_null_rows_need_watermark_proof(spark, tmp_path):
     from ophidia_io_server_spark.streaming.ingest import (
         EVENTS_SCHEMA,
         run_available_now,
-        stream_stream_attribution_outer,
+        stream_stream_attribution,
     )
 
     def rows_to_df(rows):
@@ -274,10 +274,10 @@ def test_outer_join_null_rows_need_watermark_proof(spark, tmp_path):
                 before = now
         src = (spark.readStream.schema(EVENTS_SCHEMA)
                .option("maxFilesPerTrigger", 1).parquet(path))
-        joined = stream_stream_attribution_outer(
+        joined = stream_stream_attribution(
             src.where(F.col("event_type") == "view"),
             src.where(F.col("event_type") == "purchase"),
-            window_minutes=120, watermark="1 hour")
+            window_minutes=120, watermark="1 hour", how="leftOuter")
         got = run_available_now(joined, f"t_outer_{name}",
                                 output_mode="append")
         got = got.where(F.col("user_id") >= 0)
@@ -367,6 +367,57 @@ def test_drain_timeout_raises_and_stops_query(spark, tmp_path, server, drain):
             streaming_insert_fragment(spark, stream, server.catalog,
                                       "slow_frag", timeout_sec=1)
     assert spark.streams.active == []
+
+
+def test_event_stagings_follow_a_regenerated_source(spark, tmp_path):
+    """The /tmp event stagings are keyed on the source parquet's identity
+    (path, size, mtime): regenerating ``events.parquet`` at the same path
+    stages and serves the new rows, not the rows staged from the old file."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ophidia_io_server_spark.sources import tables
+    from ophidia_io_server_spark.workloads.streaming import (
+        _staged_events_dir,
+        _staged_events_outer_dir,
+    )
+
+    sf = str(tmp_path)
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+
+    def write_events(n):
+        pq.write_table(pa.table({
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array([t0 + dt.timedelta(minutes=i) for i in range(n)],
+                           pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array([i % 2 for i in range(n)], pa.int64()),
+            "event_type": ["view"] * n,
+            "value": [0.0] * n,
+            "props": pa.array([None] * n, pa.string()),
+        }), f"{sf}/events.parquet")
+
+    def served(path):
+        return sorted(r.event_id for r in
+                      spark.read.parquet(path).select("event_id").collect()
+                      if r.event_id < 10**15)  # drop the outer sentinels
+
+    staged = []
+    try:
+        for n in (3, 5):
+            write_events(n)
+            # a new process starts with an empty table-plan memo; the /tmp
+            # stagings outlive it
+            for k in [k for k in tables._TABLE_PLAN_MEMO if sf in k]:
+                del tables._TABLE_PLAN_MEMO[k]
+            for stage in (_staged_events_dir, _staged_events_outer_dir):
+                path = stage(spark, sf)
+                staged.append(path)
+                assert served(path) == list(range(n)), stage.__name__
+    finally:
+        for path in staged:
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def test_one_drain_and_no_facade_imports():
