@@ -335,7 +335,6 @@ def train_opq(emb: DataFrame, m: int = 8, ncent: int = 16,
             out[:, s * dsub:(s + 1) * dsub] = books[s][d2.argmin(axis=1)]
         return out
 
-    books = None
     for _ in range(iters_opq):
         Y = X @ R
         books = _pq_books(Y, m, ncent, iters_pq)
