@@ -8,6 +8,10 @@ cached DataFrames; Spark's own catalog handles nothing we need beyond temp
 views.  The catalog itself takes no lock: ``server.QueryServer`` serializes
 every ``IOServer.execute`` under its ``catalog_lock`` (the reference's
 rwlock), so concurrent connections never mutate it at the same time.
+
+Entries hold plans: ``put`` only marks a plan for caching (the cache fills
+when a statement that reads the fragment is drained) and
+``FragmentEntry.size`` returns a one-row plan, so neither runs a Spark job.
 """
 
 from __future__ import annotations
@@ -32,28 +36,23 @@ class FragmentEntry:
     temp: bool = False
     cached: bool = False
     device: str = "MEMORY"
-    _size: int | None = None
 
-    def size_bytes(self) -> int:
-        """Deterministic size accounting (≙ reference frag size tracking,
-        oph_io_server_query_blocks.c:2918-3009): 8 bytes per id + 8 per
-        element, computed from data not JVM internals so oracles can agree."""
-        if self._size is None:
-            from pyspark.sql import functions as F
-
-            schema = dict(self.df.dtypes)
-            acc = None
-            for name, t in schema.items():
-                if t.startswith("array"):
-                    c = F.coalesce(F.size(F.col(name)), F.lit(0)) * 8
-                elif t == "string":
-                    c = F.coalesce(F.length(F.col(name)), F.lit(0))
-                else:
-                    c = F.lit(8)
-                acc = c if acc is None else acc + c
-            row = self.df.agg(F.coalesce(F.sum(acc), F.lit(0)).alias("s")).collect()[0]
-            self._size = int(row["s"])
-        return self._size
+    def size(self) -> DataFrame:
+        """One-row plan ``(frag, size_bytes)`` (≙ reference frag size
+        tracking, oph_io_server_query_blocks.c:2918-3009): 8 bytes per id and
+        per element, 1 per string character, computed from the data rather
+        than JVM internals so oracles can agree."""
+        acc = None
+        for name, t in self.df.dtypes:
+            if t.startswith("array"):
+                c = F.coalesce(F.size(F.col(name)), F.lit(0)) * 8
+            elif t == "string":
+                c = F.coalesce(F.length(F.col(name)), F.lit(0))
+            else:
+                c = F.lit(8)
+            acc = c if acc is None else acc + c
+        return self.df.agg(F.lit(self.name).alias("frag"),
+                           F.coalesce(F.sum(acc), F.lit(0)).alias("size_bytes"))
 
 
 @dataclass

@@ -11,10 +11,11 @@ create_database, drop_database, and the stored procedures
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.internal import InternalFunction
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from ophidia_io_server_spark.catalog import Catalog
@@ -32,16 +33,6 @@ FRAG_SCHEMA = StructType(
 
 
 @dataclass
-class _InsertBuffer:
-    """Multi-run insert accumulation (reference oph_io_server_query.c:190-231):
-    rows pile up across protocol runs and the fragment is stored at the final
-    run.  The streaming path (streaming/ingest.py) is the scale variant."""
-
-    frag: str
-    rows: list = field(default_factory=list)
-
-
-@dataclass
 class IOServer:
     spark: SparkSession
     catalog: Catalog = None  # type: ignore[assignment]
@@ -50,7 +41,10 @@ class IOServer:
     def __post_init__(self):
         if self.catalog is None:
             self.catalog = Catalog(self.spark)
-        self._insert_buffers: dict[str, _InsertBuffer] = {}
+        # multi-run insert accumulation (reference oph_io_server_query.c:190-231):
+        # rows pile up per fragment across protocol runs and the fragment is
+        # stored at the final run.  streaming/ingest.py is the scale variant
+        self._insert_buffers: dict[str, list] = {}
         self._flushed: set[str] = set()  # fragments whose insert run completed
 
     # ------------------------------------------------------------------
@@ -98,7 +92,7 @@ class IOServer:
             raise QueryExecError(f"fragment {frag_name!r} exists")
         empty = self.spark.createDataFrame([], FRAG_SCHEMA)
         self.catalog.put(frag_name, empty, cache=False)
-        self._insert_buffers[frag_name] = _InsertBuffer(frag=frag_name)
+        self._insert_buffers[frag_name] = []
         self._flushed.discard(frag_name)
         return None
 
@@ -119,7 +113,7 @@ class IOServer:
 
     # -- inserts --------------------------------------------------------
 
-    def _buffer_for(self, frag_name: str) -> _InsertBuffer:
+    def _buffer_for(self, frag_name: str) -> list:
         if frag_name not in self._insert_buffers:
             if frag_name in self._flushed:
                 # a completed insert run already stored this fragment: the
@@ -131,41 +125,34 @@ class IOServer:
                     f"fragment {frag_name!r} already stored; drop/recreate it "
                     "before inserting again"
                 )
-            self._insert_buffers[frag_name] = _InsertBuffer(frag=frag_name)
+            self._insert_buffers[frag_name] = []
         return self._insert_buffers[frag_name]
 
     def _store_buffer(self, frag_name: str) -> None:
-        buf = self._insert_buffers.pop(frag_name, None)
-        if buf is None:
+        rows = self._insert_buffers.pop(frag_name, None)
+        if rows is None:
             return
         df = self.spark.createDataFrame(
-            [Row(id_dim=int(r[0]), measure=[float(v) for v in r[1]]) for r in buf.rows],
+            [Row(id_dim=int(r[0]), measure=[float(v) for v in r[1]]) for r in rows],
             FRAG_SCHEMA,
         )
         self.catalog.put(frag_name, df, cache=True, overwrite=True)
         self._flushed.add(frag_name)
 
-    def _op_insert(self, q, params) -> None:
-        """insert: one row per statement; tot_run/curr_run control batching."""
-        frag_name = self._frag_name(q)
-        buf = self._buffer_for(frag_name)
-        buf.rows.append(self._row_from_query(q, params))
-        tot = int(q.get("tot_run", 1))
-        cur = int(q.get("curr_run", tot))
-        if cur >= tot:
-            self._store_buffer(frag_name)
-        return None
-
     def _op_multi_insert(self, q, params) -> None:
+        """``value=(..),(..)`` tuples; tot_run/curr_run or final_statement
+        control batching across statements."""
         frag_name = self._frag_name(q)
-        buf = self._buffer_for(frag_name)
-        buf.rows.extend(self._rows_from_multi(q, params))
+        self._buffer_for(frag_name).extend(self._rows_from_multi(q, params))
         tot = int(q.get("tot_run", 1))
         cur = int(q.get("curr_run", tot))
         final = str(q.get("final_statement", "yes" if cur >= tot else "no")).lower() == "yes"
         if final:
             self._store_buffer(frag_name)
         return None
+
+    # insert is one tuple per statement: `value=?,?` parses as one tuple
+    _op_insert = _op_multi_insert
 
     @staticmethod
     def _parse_value_tuple(vals: str, params: dict) -> tuple:
@@ -191,16 +178,10 @@ class IOServer:
             raise QueryExecError(f"insert: bad value literal in {vals!r}: {e}") from None
         return (id_val, m_val)
 
-    def _row_from_query(self, q, params) -> tuple:
-        vals = q.get("value")
-        if not vals:
-            raise QueryExecError("insert: missing value clause")
-        return self._parse_value_tuple(vals, params)
-
     def _rows_from_multi(self, q, params) -> list[tuple]:
         vals = q.get("value")
         if not vals:
-            raise QueryExecError("multi_insert: missing value clause")
+            raise QueryExecError(f"{q['operation']}: missing value clause")
         return [self._parse_value_tuple(v.strip().strip("()"), params)
                 for v in vals.split("),(")]
 
@@ -317,10 +298,7 @@ class IOServer:
                  else export_fragment_nc(frag_df, args[1]))
             return self.spark.createDataFrame([Row(frag=args[0], written=n)])
         if fname == "oph_size":
-            entry = self.catalog.get(args[0])
-            return self.spark.createDataFrame(
-                [Row(frag=entry.name, size_bytes=entry.size_bytes())]
-            )
+            return self.catalog.get(args[0]).size()
         raise QueryExecError(f"unknown procedure {fname!r}")
 
     def _proc_subset(self, args, params) -> None:
@@ -348,64 +326,12 @@ def sequential_ids(df: DataFrame, id_start: int) -> DataFrame:
     """Renumber id_dim sequentially from id_start in id order (reference
     sequential_id mechanics, blocks.c:2173-2186,2459-2477).
 
-    Scale-safe two-pass dense numbering (no single-partition global window):
-    (1) range-partition by id_dim so partitions hold contiguous id ranges,
-    (2) count rows per partition, prefix-sum the counts on the driver
-    (one tiny array), (3) number each partition independently as
-    offset + local_rank.  Every pass is fully parallel.
-
-    The count pass and the renumber pass MUST see the same rows in the same
-    partitions: repartitionByRange samples range boundaries per job, so two
-    independent actions on the unpersisted plan could place rows differently
-    and silently break the dense-id invariant the join contract depends on.
-    So: persist the partitioned frame, materialize it through the count pass,
-    renumber from the pinned cache, materialize the (cached) result, then
-    release the intermediate.
-    """
-    import pandas as pd  # noqa: PLC0415 — driver-side tiny frame only
-
+    A lazy plan: a global sort on id_dim, then Spark's distributed sequence
+    (the numbering pandas-on-Spark uses for its default index).  Its
+    ``AttachDistributedSequenceExec`` counts the rows of each sorted
+    partition, prefix-sums the counts and numbers every partition from its
+    offset, all in the JVM, and pins its input between the passes so both
+    see the same rows in the same partitions."""
     other = [c for c in df.columns if c != ID_COL]
-    # explicit partition count: user-specified repartitions are exempt from
-    # AQE coalescing, so BOTH passes below see identical partition ids
-    nparts = df.sparkSession.sparkContext.defaultParallelism
-    parts = df.repartitionByRange(nparts, F.col(ID_COL).asc()) \
-        .sortWithinPartitions(ID_COL).persist()
-    counts_schema = "pid int, cnt long"
-
-    def count_rows(it):
-        n = 0
-        pid = -1
-        for pdf in it:
-            n += len(pdf)
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        yield pd.DataFrame({"pid": [pid], "cnt": [n]})
-
-    counts = {r.pid: r.cnt for r in parts.mapInPandas(count_rows, counts_schema).collect()}
-    offsets = {}
-    acc = id_start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-
-    out_schema = ", ".join(
-        [f"{ID_COL} long"] + [f"{c} {t}" for c, t in df.dtypes if c != ID_COL]
-    )
-
-    def renumber(it):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        base = offsets.get(pid, id_start)
-        seen = 0
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf[ID_COL] = range(base + seen, base + seen + len(pdf))
-            seen += len(pdf)
-            yield pdf[[ID_COL] + other]
-
-    out = parts.mapInPandas(renumber, out_schema).cache()
-    out.count()  # pin the renumbered rows before freeing the intermediate
-    parts.unpersist()
-    return out
+    seq = InternalFunction.distributed_sequence_id() + F.lit(id_start)
+    return df.orderBy(ID_COL).select(seq.alias(ID_COL), *other)

@@ -15,15 +15,22 @@ with a result set, the RS packet stream (terminated by its zero-row packet),
 for ok without result an empty RS stream, and for errors a 4-byte length +
 UTF-8 message.  ``QUIT`` closes the connection.
 
+Execution contract: ``IOServer.execute`` only builds plans and updates the
+catalog; Spark runs a statement's work when its result set is drained.  The
+exceptions are ``oph_export_nc``, which writes its file inside ``execute``,
+and the opt-in ``validate_dense`` check.  A statement that stores a fragment
+(CTAS, ``oph_subset``, imports, inserts) stores a plan, so a runtime failure
+in its expressions surfaces at the first statement that reads the fragment.
+
 Error contract: the handler pulls the first packet before it sends ``K``,
 and pulling it runs the query's single Spark job to completion (the result
 set is materialised once in the JVM driver, bounded by
 ``spark.driver.maxResultSize``).  So analysis errors, runtime errors in any
-partition and an over-limit result all become clean ``E`` frames, and the
-connection stays usable.  Only a failure while sending the remaining packets
-(e.g. the client went away) closes the connection mid-stream; clients treat
-a truncated RS stream as a query failure, as with the reference's chunked
-send loop.
+partition (``oph_size`` included) and an over-limit result all become clean
+``E`` frames, and the connection stays usable.  Only a failure while sending
+the remaining packets (e.g. the client went away) closes the connection
+mid-stream; clients treat a truncated RS stream as a query failure, as with
+the reference's chunked send loop.
 
 Each request's Spark jobs run under the job group ``oph-io:<peer port>:<n>``
 (``n`` counts the connection's requests from 1), described by the first 120
@@ -81,10 +88,10 @@ class _Handler(socketserver.StreamRequestHandler):
             try:
                 params = self._read_binds()
                 # serialize execute (≙ the reference's MetaDB rwlock): catalog
-                # mutations are driver-side dict ops.  A returned plan runs
-                # outside the lock, but oph_size, sequential_ids (subset and
-                # CTAS), assert_dense_ids and oph_export_nc run eager Spark
-                # jobs inside execute, so they hold the lock while they run
+                # mutations are driver-side dict ops and the returned plan
+                # runs outside the lock.  Only oph_export_nc and, under
+                # validate_dense, assert_dense_ids run Spark jobs inside
+                # execute, so they hold the lock while they run
                 with lock:
                     df = srv.execute(query, params=params)
                 # pull the FIRST packet before emitting the 'K' status byte:

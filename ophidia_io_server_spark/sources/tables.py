@@ -10,6 +10,8 @@ operate on the identical fragment.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -19,7 +21,7 @@ TABLES = (
 )
 
 
-_TABLE_PLAN_MEMO: dict[tuple, DataFrame] = {}
+_TABLE_PLAN_MEMO: dict[tuple, tuple[tuple[int, int], DataFrame]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -35,25 +37,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     action still computes from the parquet inputs; it is exactly the
     plan object a single well-written application would build once and
     reuse.  Keyed by ``session_key`` so foreign driver sessions and test
-    sessions never share plans."""
+    sessions never share plans.  Each entry also records the parquet's size
+    and mtime (the ``_corpus_tag`` identity rule): a table regenerated at
+    the same path gets a fresh plan, which replaces the one over its
+    deleted files."""
     from ophidia_io_server_spark.session import session_key
 
+    path = f"{sf_dir}/{name}.parquet"
+    st = os.stat(path)
+    ident = (st.st_size, st.st_mtime_ns)
     key = (*session_key(spark), sf_dir, name)
     got = _TABLE_PLAN_MEMO.get(key)
-    if got is not None:
-        return got
+    if got is not None and got[0] == ident:
+        return got[1]
     if name == "events":
         # the driver may hand us a session built without our defaults; the
         # testdata events.ts is TIMESTAMP(NANOS), unreadable unless this
         # legacy conf is on (runtime-settable)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) read via nanosAsLong → convert to timestamp (µs).
         # Integer `div`, NOT `/`: double division of epoch-nanos (~1.7e18)
         # carries ±256 ns representation error → off-by-1µs timestamps.
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    _TABLE_PLAN_MEMO[key] = df
+    _TABLE_PLAN_MEMO[key] = (ident, df)
     return df
 
 

@@ -6,6 +6,9 @@ cd "$(dirname "$0")/.."
 echo "== pytest =="
 python -m pytest tests/ -q
 
+echo "== engine benchmark smoke (wire read rounds + write cycle) =="
+python -m pytest enginebench/test_smoke.py -q
+
 echo "== correctness gate (sf0.01, DuckDB oracle) =="
 python scripts/check_correctness.py /root/testdata/sf0.01
 

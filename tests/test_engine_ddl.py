@@ -148,3 +148,45 @@ def test_bit_measure_queries(spark):
     assert all(r.n == 8 and 0.0 <= r.ones <= 8.0 for r in out)
     # mixed algorithm decorrelates: not every row is all-0 or all-1
     assert any(0.0 < r.ones < 8.0 for r in out)
+
+
+def test_execute_builds_plans_only(spark, group_job_ids):
+    """random_import, oph_subset, a sequential-id CTAS and oph_size start no
+    Spark job inside ``execute``; their work runs when the results are
+    drained, with the sizes and dense ids the eager path used to give."""
+    from pyspark.sql import functions as F
+
+    from ophidia_io_server_spark.operators.engine import IOServer
+
+    sc = spark.sparkContext
+    srv = IOServer(spark)
+    build, drain = "test-execute-plans-only", "test-execute-plans-only-drain"
+    sc.setJobGroup(build, "execute only")
+    try:
+        srv.execute("operation=random_import;frag_name=pl_src;nrows=300;array_len=5;"
+                    "algorithm=mixed;seed=3")
+        srv.execute("operation=function;function=oph_subset;"
+                    "arg='pl_src'|'10'|'measure'|'pl_sub'|'oph_is_in_subset(id_dim,1,3,300)'")
+        srv.execute("operation=create_frag_select;frag_name=pl_ct;from=pl_src;"
+                    "field=id_dim|measure;where=id_dim>=150;sequential_id=500")
+        sizes = {f: srv.execute(f"operation=function;function=oph_size;arg={f}")
+                 for f in ("pl_src", "pl_sub", "pl_ct")}
+    finally:
+        sc.setJobGroup(None, None)
+    sc.setJobGroup(drain, "drain")
+    try:
+        got = {f: df.collect() for f, df in sizes.items()}
+        ids = {f: sorted(r.id_dim for r in srv.catalog.df(f).select("id_dim").collect())
+               for f in ("pl_sub", "pl_ct")}
+        want = {f: srv.catalog.df(f).agg(8 * F.count("*") + 8 * F.sum(F.size("measure")))
+                .first()[0] for f in sizes}
+    finally:
+        sc.setJobGroup(None, None)
+    # listener events arrive in order: once the drain's jobs are visible,
+    # any job started inside execute would be visible too
+    assert group_job_ids(drain)
+    assert list(sc.statusTracker().getJobIdsForGroup(build)) == []
+    for f, rows in got.items():
+        assert [(r.frag, r.size_bytes) for r in rows] == [(f, want[f])]
+    assert ids["pl_sub"] == list(range(10, 10 + 100))
+    assert ids["pl_ct"] == list(range(500, 500 + 151))

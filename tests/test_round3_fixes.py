@@ -1,8 +1,9 @@
 """Round-3 engine hardening regression tests:
 
-- sequential_ids: dense-id invariant survives repeated runs over a skewed
-  frame (the two-pass renumber is pinned by a persist, so range-boundary
-  re-sampling between the count and renumber jobs can't skew the numbering).
+- sequential_ids: dense-id invariant survives repeated runs over a skewed,
+  an empty and a one-partition frame (Spark's distributed sequence pins its
+  sorted input between its count and numbering passes, so range-boundary
+  re-sampling between them can't skew the numbering).
 - insert-after-flush: inserting into a fragment whose insert run already
   committed raises (reference parity) instead of silently replacing rows.
 - server wire: a query that fails during result materialization produces a
@@ -20,14 +21,20 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.001"
 
 
-def test_sequential_ids_dense_on_skewed_frame(spark):
+@pytest.mark.parametrize("frame,nparts", [("skewed", 7), ("empty", 3), ("one_partition", 1)],
+                         ids=["skewed", "empty", "one_partition"])
+def test_sequential_ids_dense_on_skewed_frame(spark, frame, nparts):
     from ophidia_io_server_spark.operators.engine import sequential_ids
 
     # skewed id space: a huge cluster at one end plus sparse far outliers —
-    # range-boundary sampling differs easily between jobs on such a frame
+    # range-boundary sampling differs easily between jobs on such a frame.
+    # The empty and one-partition frames are the edge cases of the
+    # per-partition offsets
     rows = [(i, [float(i)]) for i in range(1, 2001)]
     rows += [(10_000_000 + i * 997, [float(i)]) for i in range(200)]
-    df = spark.createDataFrame(rows, "id_dim long, measure array<double>").repartition(7)
+    if frame == "empty":
+        rows = []
+    df = spark.createDataFrame(rows, "id_dim long, measure array<double>").repartition(nparts)
     for _ in range(2):  # run twice: flakiness here is the bug being guarded
         out = sequential_ids(df, 100)
         ids = [r.id_dim for r in out.select("id_dim").collect()]

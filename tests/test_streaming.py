@@ -420,6 +420,19 @@ def test_event_stagings_follow_a_regenerated_source(spark, tmp_path):
             shutil.rmtree(path, ignore_errors=True)
 
 
+def test_load_table_follows_a_regenerated_table(spark, tmp_path):
+    """A table rewritten at the same path gets a fresh plan from
+    ``load_table`` in the same process, not the memoized plan over the
+    deleted files."""
+    sf = str(tmp_path)
+    for keys in ([0, 1], [5, 6, 7]):
+        # an overwrite replaces the part files the first plan listed
+        spark.createDataFrame([(k,) for k in keys], "r_regionkey long") \
+            .write.mode("overwrite").parquet(f"{sf}/region.parquet")
+        got = sorted(r.r_regionkey for r in load_table(spark, sf, "region").collect())
+        assert got == keys
+
+
 def test_one_drain_and_no_facade_imports():
     """Every stream drain goes through ``ingest._drain``, and only the
     byte-frozen ``bench.py`` still imports the ``workload`` facade."""
