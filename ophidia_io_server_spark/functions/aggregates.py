@@ -69,6 +69,40 @@ def oph_aggregate_operator(args, ctx):
     return EV(folded)
 
 
+_PARTS = ("sum", "sumsq", "min", "max")
+
+
+def _fold(part, p: str) -> Column:
+    """Fold the rows' ``part(p)`` arrays element-wise over the group."""
+    return elementwise_fold(part(p), "sum" if p == "sumsq" else p)
+
+
+def _row_parts(m: Column):
+    """Each row's array for a part of ``_PARTS``: the measure, squared for sumsq."""
+    return lambda p: F.transform(m, lambda x: x * x) if p == "sumsq" else m
+
+
+def _masked_stats(name: str, mask: str, cnt: Column, part) -> Column:
+    """Concatenate the stats ``mask`` selects over (mean, variance, std, min,
+    max), building only those Columns and what they derive from: variance
+    needs the mean, std the variance.  ``part(p)`` is each row's array for
+    ``p`` in ``_PARTS``."""
+
+    def mean() -> Column:
+        return F.transform(_fold(part, "sum"), lambda x: x / cnt)
+
+    def var() -> Column:
+        return F.zip_with(_fold(part, "sumsq"), mean(),
+                          lambda q, mu: (q - cnt * mu * mu) / (cnt - 1))
+
+    stats = (mean, var, lambda: F.transform(var(), F.sqrt),
+             lambda: _fold(part, "min"), lambda: _fold(part, "max"))
+    chosen = [stats[i]() for i, flag in enumerate(mask[:5]) if flag == "1"]
+    if not chosen:
+        raise ExprError(f"{name}: empty stat mask")
+    return F.concat(*chosen) if len(chosen) > 1 else chosen[0]
+
+
 @primitive("oph_aggregate_stats", aggregate=True,
            doc="element-wise [mean|variance|std|min|max] across group rows; mask picks stats")
 def oph_aggregate_stats(args, ctx):
@@ -79,21 +113,7 @@ def oph_aggregate_stats(args, ctx):
     m = args[0].col.cast("array<double>")
     mask = str_arg(args, 1, "oph_aggregate_stats", "10000")
     cnt = F.count(F.lit(1)).cast("double")
-    s = elementwise_fold(m, "sum")
-    ss = elementwise_fold(F.transform(m, lambda x: x * x), "sum")
-    mean = F.zip_with(s, F.array_repeat(cnt, F.size(s).cast("int")), lambda a, n: a / n)
-    var = F.zip_with(ss, mean, lambda q, mu: (q - cnt * mu * mu) / (cnt - 1))
-    std = F.transform(var, F.sqrt)
-    mn = elementwise_fold(m, "min")
-    mx = elementwise_fold(m, "max")
-    stats = [mean, var, std, mn, mx]
-    chosen = [stats[i] for i, flag in enumerate(mask[:5]) if flag == "1"]
-    if not chosen:
-        raise ExprError("oph_aggregate_stats: empty stat mask")
-    out = chosen[0]
-    for c in chosen[1:]:
-        out = F.concat(out, c)
-    return EV(out)
+    return EV(_masked_stats("oph_aggregate_stats", mask, cnt, _row_parts(m)))
 
 
 @primitive("oph_aggregate_stats_partial", aggregate=True,
@@ -102,11 +122,7 @@ def oph_aggregate_stats_partial(args, ctx):
     args = strip_type_tags(args)
     m = args[0].col.cast("array<double>")
     cnt = F.count(F.lit(1)).cast("double")
-    s = elementwise_fold(m, "sum")
-    ss = elementwise_fold(F.transform(m, lambda x: x * x), "sum")
-    mn = elementwise_fold(m, "min")
-    mx = elementwise_fold(m, "max")
-    return EV(F.concat(F.array(cnt), s, ss, mn, mx))
+    return EV(F.concat(F.array(cnt), *[_fold(_row_parts(m), p) for p in _PARTS]))
 
 
 @primitive("oph_aggregate_stats_final", aggregate=True,
@@ -118,27 +134,10 @@ def oph_aggregate_stats_final(args, ctx):
     args = strip_type_tags(args)
     p = args[0].col.cast("array<double>")
     mask = str_arg(args, 1, "oph_aggregate_stats_final", "10000")
-    k = (F.size(p) - 1) / 4
-    ki = k.cast("int")
-    cnt_part = F.element_at(p, 1)
-    s_part = F.slice(p, F.lit(2), ki)
-    ss_part = F.slice(p, ki + 2, ki)
-    mn_part = F.slice(p, 2 * ki + 2, ki)
-    mx_part = F.slice(p, 3 * ki + 2, ki)
-    cnt = F.sum(cnt_part)
-    s = elementwise_fold(s_part, "sum")
-    ss = elementwise_fold(ss_part, "sum")
-    mn = elementwise_fold(mn_part, "min")
-    mx = elementwise_fold(mx_part, "max")
-    mean = F.transform(s, lambda x: x / cnt)
-    var = F.zip_with(ss, mean, lambda q, mu: (q - cnt * mu * mu) / (cnt - 1))
-    std = F.transform(var, F.sqrt)
-    stats = [mean, var, std, mn, mx]
-    chosen = [stats[i] for i, flag in enumerate(mask[:5]) if flag == "1"]
-    out = chosen[0]
-    for c in chosen[1:]:
-        out = F.concat(out, c)
-    return EV(out)
+    ki = ((F.size(p) - 1) / 4).cast("int")
+    cnt = F.sum(F.element_at(p, 1))
+    return EV(_masked_stats("oph_aggregate_stats_final", mask, cnt,
+                            lambda part: F.slice(p, _PARTS.index(part) * ki + 2, ki)))
 
 
 @primitive("oph_roll_up", aggregate=True,

@@ -9,8 +9,15 @@ DataFrame composition so Catalyst applies pushdown/pruning/codegen.
 Reference quirks preserved intentionally:
 - LIMIT applies to the *filtered input* before grouping/projection
   (engine.c:311-320), not to the final result;
-- ORDER BY is applied after projection, single numeric column, ASC only
-  (blocks.c:747-817; non-ASC ignored with a warning upstream);
+- ORDER BY names one projected column, ASC only (blocks.c:747-817; non-ASC
+  ignored with a warning upstream) and sorts the projection's output.  On a
+  row-wise select (no GROUP BY, aggregate or oph_expand) whose ORDER column
+  projects a bare input column (``id_dim``, ``x.id_dim``), the input is
+  sorted by that column before the projection instead: a row-wise
+  projection keeps its input's rows and their order, so the result is the
+  same.  Over a fragment already ordered by the column Spark then drops the
+  sort, and an Arrow UDF in the projection runs once, not again in the
+  range partitioner's sampling jobs and the shuffle;
 - with GROUP BY, non-aggregate projected expressions take the first row of
   each group (blocks.c:2438-2458);
 - multi-table FROM is the aligned equi-join on id_dim and WHERE is mandatory
@@ -30,6 +37,7 @@ from ophidia_io_server_spark.dialect.expression import (
     ExprContext,
     compile_expression,
     expression_uses_aggregate,
+    tokenize,
 )
 from ophidia_io_server_spark.dialect.parser import parse_limit
 
@@ -203,6 +211,13 @@ def _apply_expand(out: DataFrame, arr_alias: str) -> DataFrame:
     return exploded.drop("__sz", "__pos")
 
 
+def _is_column_ref(src: str) -> bool:
+    """True if a field is a bare column reference (``id_dim``, ``x.id_dim``)."""
+    tokens = tokenize(src)
+    return (len(tokens) == 2 and tokens[0][0] == "name"
+            and tokens[0][1].upper() != "NULL")
+
+
 def make_resolver(df: DataFrame):
     def resolver(name: str) -> Column:
         return df[name] if "." not in name else F.col(name)
@@ -234,6 +249,18 @@ def execute_select(catalog: Catalog, q: dict, params: dict | None = None,
     ]
 
     has_agg = any(expression_uses_aggregate(s) for s in clauses.fields)
+    expand_aliases = [
+        a for s, a in zip(clauses.fields, aliases) if _EXPAND_RE.match(s)
+    ]
+    order_col = clauses.order.strip() if clauses.order else None
+    if order_col is not None and order_col not in aliases:
+        # reference orders by one projected column name; tolerate expressions
+        order_col = default_alias(order_col, 0)
+    sort_first = (
+        order_col is not None and aliases.count(order_col) == 1
+        and not clauses.group and not has_agg and not expand_aliases
+        and _is_column_ref(clauses.fields[aliases.index(order_col)])
+    )
 
     def project_col(src: str, agg_context: bool) -> Column:
         ev = compile_expression(src, ctx)
@@ -247,6 +274,12 @@ def execute_select(catalog: Catalog, q: dict, params: dict | None = None,
             else:
                 col = F.first(col)
         return col
+
+    if sort_first:
+        # the projection is row-wise, so sorting its input by the projected
+        # column gives the same rows in the same order (module docstring)
+        df = df.orderBy(project_col(clauses.fields[aliases.index(order_col)], False).asc())
+        ctx = ExprContext(resolver=make_resolver(df), params=params or {}, id_col=ID_COL)
 
     if clauses.group:
         key = compile_expression(clauses.group, ctx)
@@ -262,9 +295,6 @@ def execute_select(catalog: Catalog, q: dict, params: dict | None = None,
             project_col(s, False).alias(a) for s, a in zip(clauses.fields, aliases)
         ])
 
-    expand_aliases = [
-        a for s, a in zip(clauses.fields, aliases) if _EXPAND_RE.match(s)
-    ]
     if expand_aliases and not clauses.group and not has_agg:
         out = _apply_expand(out, expand_aliases[0])
 
@@ -277,11 +307,8 @@ def execute_select(catalog: Catalog, q: dict, params: dict | None = None,
 
             warnings.warn(f"order_dir {direction!r} ignored: ASC-only (reference parity)",
                           stacklevel=2)
-        order_col = clauses.order.strip()
-        if order_col not in out.columns:
-            # reference orders by one projected column name; tolerate expressions
-            order_col = default_alias(order_col, 0)
         if order_col not in out.columns:
             raise QueryExecError(f"order column {clauses.order!r} not in projection")
-        out = out.orderBy(F.col(order_col).asc())
+        if not sort_first:
+            out = out.orderBy(F.col(order_col).asc())
     return out

@@ -11,34 +11,14 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ophidia_io_server_spark.operators.engine import IOServer  # noqa: F401
-from ophidia_io_server_spark.session import session_key  # noqa: F401
-from ophidia_io_server_spark.sources.random_import import (  # noqa: F401
-    random_fragment_oracle_sql,
-)
-from ophidia_io_server_spark.sources.tables import (  # noqa: F401
+from ophidia_io_server_spark.sources.tables import (
     exact_cents_sum,
-    fragment_cte,
-    lineitem_fragment,
     lineitem_fragment_cached,
     load_table,
 )
 
-from ophidia_io_server_spark.workloads.docs import (  # noqa: F401
-    _redact_oracle_exprs,
-)
-from ophidia_io_server_spark.workloads.base import (  # noqa: F401
-    WORKLOADS,
-    Workload,
-    _FRAG_BOTH_CTE,
-    _FRAG_QTY_CTE,
-    _corpus_tag,
-    _ensure_session_defaults,
-    _exploded_oracle,
-    _explode_arrays,
-    _server,
-    workload,
-)
+from ophidia_io_server_spark.workloads.docs import _redact_oracle_exprs
+from ophidia_io_server_spark.workloads.base import WORKLOADS, _FRAG_QTY_CTE, _corpus_tag, workload
 
 
 # ---------------------------------------------------------------------------
@@ -1728,8 +1708,6 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("total_e4") == F.col("mx"))
         .select("s_suppkey", "s_name", "total_e4")
     )
-
-
 
 
 @workload(

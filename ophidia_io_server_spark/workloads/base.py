@@ -21,7 +21,6 @@ semantics (window specs, top-k ranking) stay inside the operators.
 
 from __future__ import annotations
 
-import sys
 from dataclasses import dataclass
 from typing import Callable
 
@@ -29,15 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ophidia_io_server_spark.operators.engine import IOServer
-from ophidia_io_server_spark.sources.random_import import random_fragment_oracle_sql
 from ophidia_io_server_spark.session import session_key
-from ophidia_io_server_spark.sources.tables import (
-    exact_cents_sum,
-    fragment_cte,
-    lineitem_fragment,
-    lineitem_fragment_cached,
-    load_table,
-)
+from ophidia_io_server_spark.sources.tables import fragment_cte, lineitem_fragment_cached
 
 
 @dataclass

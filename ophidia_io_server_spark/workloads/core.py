@@ -9,31 +9,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ophidia_io_server_spark.operators.engine import IOServer  # noqa: F401
-from ophidia_io_server_spark.session import session_key  # noqa: F401
-from ophidia_io_server_spark.sources.random_import import (  # noqa: F401
-    random_fragment_oracle_sql,
-)
-from ophidia_io_server_spark.sources.tables import (  # noqa: F401
-    exact_cents_sum,
+from ophidia_io_server_spark.operators.engine import IOServer
+from ophidia_io_server_spark.sources.random_import import random_fragment_oracle_sql
+from ophidia_io_server_spark.sources.tables import (
     fragment_cte,
     lineitem_fragment,
     lineitem_fragment_cached,
-    load_table,
 )
 
-from ophidia_io_server_spark.workloads.base import (  # noqa: F401
-    WORKLOADS,
-    Workload,
-    _FRAG_BOTH_CTE,
-    _FRAG_QTY_CTE,
-    _corpus_tag,
-    _ensure_session_defaults,
-    _exploded_oracle,
-    _explode_arrays,
-    _server,
-    workload,
-)
+from ophidia_io_server_spark.workloads.base import _FRAG_BOTH_CTE, _FRAG_QTY_CTE, _server, workload
 
 
 # ---------------------------------------------------------------------------

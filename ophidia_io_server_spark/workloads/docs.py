@@ -9,31 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ophidia_io_server_spark.operators.engine import IOServer  # noqa: F401
-from ophidia_io_server_spark.session import session_key  # noqa: F401
-from ophidia_io_server_spark.sources.random_import import (  # noqa: F401
-    random_fragment_oracle_sql,
-)
-from ophidia_io_server_spark.sources.tables import (  # noqa: F401
-    exact_cents_sum,
-    fragment_cte,
-    lineitem_fragment,
-    lineitem_fragment_cached,
-    load_table,
-)
+from ophidia_io_server_spark.session import session_key
+from ophidia_io_server_spark.sources.tables import load_table
 
-from ophidia_io_server_spark.workloads.base import (  # noqa: F401
-    WORKLOADS,
-    Workload,
-    _FRAG_BOTH_CTE,
-    _FRAG_QTY_CTE,
-    _corpus_tag,
-    _ensure_session_defaults,
-    _exploded_oracle,
-    _explode_arrays,
-    _server,
-    workload,
-)
+from ophidia_io_server_spark.workloads.base import workload
 
 
 # ---------------------------------------------------------------------------
@@ -1052,8 +1031,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     out = frame_sample_plan(attach_binary_payload(docs), every_nth=3)
     return out.select("doc_id", F.col("frame_idx").cast("bigint").alias("frame_idx"))
-
-
 
 
 @workload(

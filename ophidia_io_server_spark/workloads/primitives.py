@@ -9,32 +9,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ophidia_io_server_spark.operators.engine import IOServer  # noqa: F401
-from ophidia_io_server_spark.session import session_key  # noqa: F401
-from ophidia_io_server_spark.sources.random_import import (  # noqa: F401
-    random_fragment_oracle_sql,
-)
-from ophidia_io_server_spark.sources.tables import (  # noqa: F401
+from ophidia_io_server_spark.session import session_key
+from ophidia_io_server_spark.sources.tables import (
     exact_cents_sum,
-    fragment_cte,
-    lineitem_fragment,
     lineitem_fragment_cached,
     load_table,
 )
 
-from ophidia_io_server_spark.workloads.docs import (  # noqa: F401
-    _EMB_BASE_CTE,
-    _SHINGLE_CTE,
-)
-from ophidia_io_server_spark.workloads.base import (  # noqa: F401
-    WORKLOADS,
-    Workload,
+from ophidia_io_server_spark.workloads.docs import _EMB_BASE_CTE, _SHINGLE_CTE
+from ophidia_io_server_spark.workloads.base import (
     _FRAG_BOTH_CTE,
     _FRAG_QTY_CTE,
     _corpus_tag,
-    _ensure_session_defaults,
-    _exploded_oracle,
-    _explode_arrays,
     _server,
     workload,
 )
@@ -557,8 +543,6 @@ def math_complex_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oph_compare returns LONG (reference RET INTEGER); the oracle emits
     # DOUBLE — align dtypes so the driver's typed value-hash matches.
     return out.withColumn("same", F.col("same").cast("double"))
-
-
 
 
 @workload(

@@ -9,38 +9,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ophidia_io_server_spark.operators.engine import IOServer  # noqa: F401
-from ophidia_io_server_spark.session import session_key  # noqa: F401
-from ophidia_io_server_spark.sources.random_import import (  # noqa: F401
-    random_fragment_oracle_sql,
-)
-from ophidia_io_server_spark.sources.tables import (  # noqa: F401
-    exact_cents_sum,
-    fragment_cte,
-    lineitem_fragment,
-    lineitem_fragment_cached,
-    load_table,
-)
+from ophidia_io_server_spark.session import session_key
+from ophidia_io_server_spark.sources.tables import load_table
 
-from ophidia_io_server_spark.workloads.docs import (  # noqa: F401
-    _JACCARD_ORACLE,
-)
-from ophidia_io_server_spark.workloads.streaming import (  # noqa: F401
-    _staged_events_dir,
-)
-from ophidia_io_server_spark.workloads.base import (  # noqa: F401
-    WORKLOADS,
-    Workload,
-    _FRAG_BOTH_CTE,
-    _FRAG_QTY_CTE,
-    _corpus_tag,
-    _ensure_session_defaults,
-    _exploded_oracle,
-    _explode_arrays,
-    _server,
-    session_memo,
-    workload,
-)
+from ophidia_io_server_spark.workloads.docs import _JACCARD_ORACLE
+from ophidia_io_server_spark.workloads.streaming import _staged_events_dir
+from ophidia_io_server_spark.workloads.base import _corpus_tag, session_memo, workload
 
 
 # --- round-6 TPC-H additions.  The synthetic tables are trimmed TPC-H (no

@@ -14,7 +14,7 @@ SF_SMALL = "/root/testdata/sf0.001"
 def spark():
     from ophidia_io_server_spark import get_spark
 
-    # the session default heap (24g) lets the JVM grow far past what the
+    # the session default heap (up to 24g) lets the JVM grow far past what the
     # sf0.001 suite needs; cap it so a full run fits a small shared host
     s = get_spark(app_name="ophidia-tests", cpus=8, shuffle_partitions=8,
                   extra_conf={"spark.driver.memory": "1g"})

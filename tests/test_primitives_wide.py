@@ -190,6 +190,59 @@ def test_aggregate_stats_partial_final(spark):
     assert got == pytest.approx(list(want_mean) + list(want_min) + list(want_max))
 
 
+STAT_MASKS = ["10000", "01000", "00100", "00010", "00001", "11111", "10011"]
+
+
+@pytest.fixture(scope="module")
+def stats_rows(spark):
+    """Nine rows of 3-element arrays in three partial groups, plus their
+    partial-stats states."""
+    from pyspark.sql import functions as F
+
+    schema = StructType([
+        StructField("id_dim", LongType()),
+        StructField("measure", ArrayType(DoubleType())),
+    ])
+    rng = np.random.default_rng(7)
+    arr = rng.normal(size=(9, 3)).round(3)
+    df = spark.createDataFrame([(i + 1, row.tolist()) for i, row in enumerate(arr)], schema)
+    part = compile_expression("oph_aggregate_stats_partial(measure)",
+                              ExprContext(resolver=lambda n: df[n]))
+    partials = (df.groupBy(((F.col("id_dim") - 1) / 3).cast("int").alias("g"))
+                .agg(part.col.alias("p")))
+    return arr, df, partials
+
+
+def _stats_oracle(arr, mask):
+    stats = [arr.mean(axis=0), arr.var(axis=0, ddof=1), arr.std(axis=0, ddof=1),
+             arr.min(axis=0), arr.max(axis=0)]
+    return np.concatenate([s for s, flag in zip(stats, mask) if flag == "1"])
+
+
+@pytest.mark.parametrize("mask", STAT_MASKS)
+def test_aggregate_stats_masks_match_numpy(stats_rows, mask):
+    """Each stat mask yields the selected stats in (mean, variance, std, min,
+    max) order, directly and merged from partial states."""
+    arr, df, partials = stats_rows
+    want = _stats_oracle(arr, mask)
+    for frame, src in ((df, f"oph_aggregate_stats(measure, '{mask}')"),
+                       (partials, f"oph_aggregate_stats_final(p, '{mask}')")):
+        ev = compile_expression(src, ExprContext(resolver=lambda n, f=frame: f[n]))
+        got = frame.agg(ev.col.alias("s")).collect()[0]["s"]
+        np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-12)
+
+
+@pytest.mark.parametrize("src", ["oph_aggregate_stats(measure, '00000')",
+                                 "oph_aggregate_stats_final(p, '00000')"])
+def test_aggregate_stats_empty_mask_is_an_expr_error(stats_rows, src):
+    from ophidia_io_server_spark.dialect.expression import ExprError
+
+    _, df, partials = stats_rows
+    frame = partials if "final" in src else df
+    with pytest.raises(ExprError, match="empty stat mask"):
+        compile_expression(src, ExprContext(resolver=lambda n: frame[n]))
+
+
 def test_fft_ifft_roundtrip(frag):
     """ifft(fft(x)) reproduces x interleaved with zero imaginary parts."""
     got = run1(frag, "oph_gsl_complex_get_real(oph_gsl_ifft(oph_gsl_fft(measure)))")

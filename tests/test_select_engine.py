@@ -1,5 +1,6 @@
 """Select-pipeline clause semantics (reference quirks included)."""
 
+import numpy as np
 import pytest
 
 from ophidia_io_server_spark.operators.select import QueryExecError
@@ -146,3 +147,79 @@ def test_info_pseudo_tables(spark):
     inv = srv.execute("operation=select;from=@info_system_table;"
                       "field=db|frag|device;select_alias=db|frag|device").collect()
     assert ("default", "inv1", "MEMORY") in {(r.db, r.frag, r.device) for r in inv}
+
+
+def test_udf_select_over_ordered_fragment_runs_once(spark, group_job_ids):
+    """An Arrow-UDF select ordered by a projected id column, over a
+    random_import fragment (range-partitioned and sorted by id_dim), sorts
+    its input before the projection: Spark drops that sort, so the drain is
+    one job with no Exchange, and the UDF runs once."""
+    from ophidia_io_server_spark.operators import IOServer
+
+    srv = IOServer(spark)
+    srv.execute("operation=random_import;frag_name=udf_once;nrows=2000;array_len=8;"
+                "algorithm=mixed;seed=5")
+    srv.catalog.df("udf_once").count()  # build the cache outside the group
+    out = srv.execute("operation=select;from=udf_once;field=id_dim|oph_gsl_fft(measure);"
+                      "select_alias=id_dim|f;where=id_dim>=700&id_dim<1200;order=id_dim")
+    group = "test-udf-select-once"
+    spark.sparkContext.setJobGroup(group, "udf select")
+    try:
+        rows = out.collect()
+    finally:
+        spark.sparkContext.setJobGroup(None, None)
+    assert [r.id_dim for r in rows] == list(range(700, 1200))
+    assert len(group_job_ids(group)) == 1
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+
+
+def _measure(i):
+    return np.array([float(i), 0.5 * i, float(-i), float(i % 7)])
+
+
+def _fft(i):
+    spec = np.fft.fft(_measure(i))
+    return np.column_stack([spec.real, spec.imag]).ravel()
+
+
+@pytest.fixture(scope="module")
+def shuffled_server(spark):
+    """Two fragments whose rows are stored in shuffled id order over four
+    partitions, so no order on id_dim is known to Spark."""
+    import random
+
+    from ophidia_io_server_spark.operators import IOServer
+
+    srv = IOServer(spark)
+    ids = list(range(1, 201))
+    for name, seed in (("shuf_a", 1), ("shuf_b", 2)):
+        random.Random(seed).shuffle(ids)
+        rows = [(i, _measure(i).tolist()) for i in ids]
+        df = spark.createDataFrame(rows, "id_dim long, measure array<double>").repartition(4)
+        srv.catalog.put(name, df)
+    return srv
+
+
+@pytest.mark.parametrize("query, want_id, check", [
+    # ORDER by the alias of a bare column: the input is sorted first
+    ("field=id_dim|oph_gsl_fft(measure);select_alias=id_dim|f;where=id_dim>=20;"
+     "order=id_dim",
+     lambda r: r[0],
+     lambda i, v: np.allclose(v, _fft(i))),
+    # multi-table FROM, ORDER by a qualified bare column
+    ("from_alias=x|y;field=x.id_dim|oph_reduce(oph_mul_array(x.measure,y.measure),'sum');"
+     "where=x.id_dim=y.id_dim&x.id_dim>=20;order=x.id_dim",
+     lambda r: r[0],
+     lambda i, v: np.isclose(v, (_measure(i) ** 2).sum())),
+    # ORDER by an expression alias: sorted after the projection
+    ("field=id_dim*2|oph_gsl_fft(measure);select_alias=twice|f;where=id_dim>=20;"
+     "order=twice",
+     lambda r: r[0] // 2,
+     lambda i, v: np.allclose(v, _fft(i))),
+], ids=["udf", "multi_table", "expression_alias"])
+def test_order_over_shuffled_fragment(shuffled_server, query, want_id, check):
+    frm = "shuf_a|shuf_b" if "from_alias" in query else "shuf_a"
+    rows = shuffled_server.execute(f"operation=select;from={frm};{query}").collect()
+    got = [want_id(r) for r in rows]
+    assert got == list(range(20, 201))
+    assert all(check(i, r[1]) for i, r in zip(got, rows))
