@@ -18,6 +18,8 @@ shuffle for bounded memory.
 
 from __future__ import annotations
 
+from functools import cache
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -85,12 +87,14 @@ def _row_parts(m: Column):
 def _masked_stats(name: str, mask: str, cnt: Column, part) -> Column:
     """Concatenate the stats ``mask`` selects over (mean, variance, std, min,
     max), building only those Columns and what they derive from: variance
-    needs the mean, std the variance.  ``part(p)`` is each row's array for
-    ``p`` in ``_PARTS``."""
+    needs the mean, std the variance, each built once.  ``part(p)`` is each
+    row's array for ``p`` in ``_PARTS``."""
 
+    @cache
     def mean() -> Column:
         return F.transform(_fold(part, "sum"), lambda x: x / cnt)
 
+    @cache
     def var() -> Column:
         return F.zip_with(_fold(part, "sumsq"), mean(),
                           lambda q, mu: (q - cnt * mu * mu) / (cnt - 1))
