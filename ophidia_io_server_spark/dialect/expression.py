@@ -300,11 +300,20 @@ def _var_resolver(name: str, var: str, x: Column) -> Column:
     raise ExprError(f"unknown variable {name!r} (expected {var!r})")
 
 
-def expression_uses_aggregate(src: str) -> bool:
-    """True if the expression calls any AGGREGATE-class primitive."""
+def _calls_primitive(src: str, flag: str) -> bool:
     from ophidia_io_server_spark.functions import PRIMITIVES
 
     for kind, v in tokenize(src)[:-1]:
-        if kind == "name" and v.lower() in PRIMITIVES and PRIMITIVES[v.lower()].aggregate:
+        if kind == "name" and v.lower() in PRIMITIVES and getattr(PRIMITIVES[v.lower()], flag):
             return True
     return False
+
+
+def expression_uses_aggregate(src: str) -> bool:
+    """True if the expression calls any AGGREGATE-class primitive."""
+    return _calls_primitive(src, "aggregate")
+
+
+def expression_uses_arrow(src: str) -> bool:
+    """True if the expression calls any primitive built on a pandas UDF."""
+    return _calls_primitive(src, "arrow")

@@ -22,15 +22,17 @@ class Primitive:
     name: str
     fn: Callable
     aggregate: bool = False
+    arrow: bool = False  # builds an Arrow-batched pandas UDF
     doc: str = ""
 
 
 PRIMITIVES: dict[str, Primitive] = {}
 
 
-def primitive(name: str, aggregate: bool = False, doc: str = ""):
+def primitive(name: str, aggregate: bool = False, arrow: bool = False, doc: str = ""):
     def deco(fn):
-        PRIMITIVES[name] = Primitive(name=name, fn=fn, aggregate=aggregate, doc=doc or fn.__doc__ or "")
+        PRIMITIVES[name] = Primitive(name=name, fn=fn, aggregate=aggregate, arrow=arrow,
+                                     doc=doc or fn.__doc__ or "")
         return fn
 
     return deco

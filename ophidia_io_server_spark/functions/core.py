@@ -604,7 +604,7 @@ def oph_convert_l(args, ctx):
     return EV(args[0].col.cast("array<long>"))
 
 
-@primitive("oph_to_bin", doc="pack numeric array to little-endian bytes (pandas UDF)")
+@primitive("oph_to_bin", arrow=True, doc="pack numeric array to little-endian bytes (pandas UDF)")
 def oph_to_bin(args, ctx):
     from ophidia_io_server_spark.functions.binary_codec import to_bin_udf
 
@@ -612,7 +612,7 @@ def oph_to_bin(args, ctx):
     return EV(to_bin_udf(args[0].col.cast("array<double>")))
 
 
-@primitive("oph_value_to_bin", doc="pack a single value to little-endian bytes")
+@primitive("oph_value_to_bin", arrow=True, doc="pack a single value to little-endian bytes")
 def oph_value_to_bin(args, ctx):
     from ophidia_io_server_spark.functions.binary_codec import to_bin_udf
 
@@ -620,7 +620,7 @@ def oph_value_to_bin(args, ctx):
     return EV(to_bin_udf(F.array(args[0].numeric().cast("double"))))
 
 
-@primitive("oph_from_bin", doc="unpack little-endian double bytes to array")
+@primitive("oph_from_bin", arrow=True, doc="unpack little-endian double bytes to array")
 def oph_from_bin(args, ctx):
     from ophidia_io_server_spark.functions.binary_codec import from_bin_udf
 
@@ -628,7 +628,7 @@ def oph_from_bin(args, ctx):
     return EV(from_bin_udf(args[0].col))
 
 
-@primitive("oph_compress", doc="zlib-compress packed array bytes (pandas UDF)")
+@primitive("oph_compress", arrow=True, doc="zlib-compress packed array bytes (pandas UDF)")
 def oph_compress(args, ctx):
     from ophidia_io_server_spark.functions.binary_codec import compress_udf
 
@@ -636,7 +636,7 @@ def oph_compress(args, ctx):
     return EV(compress_udf(args[0].col.cast("array<double>")))
 
 
-@primitive("oph_uncompress", doc="inverse of oph_compress")
+@primitive("oph_uncompress", arrow=True, doc="inverse of oph_compress")
 def oph_uncompress(args, ctx):
     from ophidia_io_server_spark.functions.binary_codec import uncompress_udf
 
@@ -644,7 +644,7 @@ def oph_uncompress(args, ctx):
     return EV(uncompress_udf(args[0].col))
 
 
-@primitive("oph_dump", doc="hex dump of the packed array bytes")
+@primitive("oph_dump", arrow=True, doc="hex dump of the packed array bytes")
 def oph_dump(args, ctx):
     from ophidia_io_server_spark.functions.binary_codec import to_bin_udf
 

@@ -110,7 +110,8 @@ def oph_gsl_correlation(args, ctx):
     return EV(cov / F.sqrt(va * vb))
 
 
-@primitive("oph_gsl_fft", doc="full FFT of real input → interleaved re/im (numpy kernel)")
+@primitive("oph_gsl_fft", arrow=True,
+           doc="full FFT of real input → interleaved re/im (numpy kernel)")
 def oph_gsl_fft(args, ctx):
     from ophidia_io_server_spark.functions.pandas_kernels import fft_udf
 
@@ -118,7 +119,7 @@ def oph_gsl_fft(args, ctx):
     return EV(fft_udf(args[0].col.cast("array<double>")))
 
 
-@primitive("oph_gsl_ifft", doc="inverse FFT of interleaved re/im → interleaved re/im")
+@primitive("oph_gsl_ifft", arrow=True, doc="inverse FFT of interleaved re/im → interleaved re/im")
 def oph_gsl_ifft(args, ctx):
     from ophidia_io_server_spark.functions.pandas_kernels import ifft_udf
 
@@ -126,7 +127,7 @@ def oph_gsl_ifft(args, ctx):
     return EV(ifft_udf(args[0].col.cast("array<double>")))
 
 
-@primitive("oph_gsl_dwt", doc="one-level Haar DWT [approx|detail]")
+@primitive("oph_gsl_dwt", arrow=True, doc="one-level Haar DWT [approx|detail]")
 def oph_gsl_dwt(args, ctx):
     from ophidia_io_server_spark.functions.pandas_kernels import dwt_udf
 
@@ -134,7 +135,7 @@ def oph_gsl_dwt(args, ctx):
     return EV(dwt_udf(args[0].col.cast("array<double>")))
 
 
-@primitive("oph_gsl_idwt", doc="inverse one-level Haar DWT")
+@primitive("oph_gsl_idwt", arrow=True, doc="inverse one-level Haar DWT")
 def oph_gsl_idwt(args, ctx):
     from ophidia_io_server_spark.functions.pandas_kernels import idwt_udf
 
@@ -195,7 +196,8 @@ def oph_gsl_spline(args, ctx):
     return EV(F.transform(F.sequence(F.lit(0), F.lit(new_size - 1)), lerp))
 
 
-@primitive("oph_ccluster_kcluster", doc="1-D k-means on the array → k sorted centroids")
+@primitive("oph_ccluster_kcluster", arrow=True,
+           doc="1-D k-means on the array → k sorted centroids")
 def oph_ccluster_kcluster(args, ctx):
     from ophidia_io_server_spark.functions.pandas_kernels import kcluster_udf
 

@@ -120,7 +120,7 @@ def oph_reduce3(args, ctx):
     )
 
 
-@primitive("oph_accumulate", doc="prefix sums (running total) within the array")
+@primitive("oph_accumulate", arrow=True, doc="prefix sums (running total) within the array")
 def oph_accumulate(args, ctx):
     args = strip_type_tags(args)
     m = args[0].col

@@ -11,13 +11,16 @@ Reference quirks preserved intentionally:
   (engine.c:311-320), not to the final result;
 - ORDER BY names one projected column, ASC only (blocks.c:747-817; non-ASC
   ignored with a warning upstream) and sorts the projection's output.  On a
-  row-wise select (no GROUP BY, aggregate or oph_expand) whose ORDER column
-  projects a bare input column (``id_dim``, ``x.id_dim``), the input is
-  sorted by that column before the projection instead: a row-wise
-  projection keeps its input's rows and their order, so the result is the
-  same.  Over a fragment already ordered by the column Spark then drops the
-  sort, and an Arrow UDF in the projection runs once, not again in the
-  range partitioner's sampling jobs and the shuffle;
+  row-wise select (no GROUP BY, aggregate or oph_expand) that calls a pandas
+  UDF and whose ORDER column projects a bare input column (``id_dim``,
+  ``x.id_dim``), the input is sorted by that column before the projection
+  instead: a row-wise projection keeps its input's rows and their order, so
+  the result is the same.  The UDF then runs once, after any shuffle, not
+  again in the range partitioner's sampling jobs and the shuffle map; over a
+  fragment already ordered by the column Spark drops the sort altogether.
+  Without a UDF the sort stays after the projection, so a shuffle over an
+  unordered input moves the projected rows, which a reducing projection
+  makes far narrower than the input rows;
 - with GROUP BY, non-aggregate projected expressions take the first row of
   each group (blocks.c:2438-2458);
 - multi-table FROM is the aligned equi-join on id_dim and WHERE is mandatory
@@ -37,6 +40,7 @@ from ophidia_io_server_spark.dialect.expression import (
     ExprContext,
     compile_expression,
     expression_uses_aggregate,
+    expression_uses_arrow,
     tokenize,
 )
 from ophidia_io_server_spark.dialect.parser import parse_limit
@@ -260,6 +264,7 @@ def execute_select(catalog: Catalog, q: dict, params: dict | None = None,
         order_col is not None and aliases.count(order_col) == 1
         and not clauses.group and not has_agg and not expand_aliases
         and _is_column_ref(clauses.fields[aliases.index(order_col)])
+        and any(expression_uses_arrow(s) for s in clauses.fields)
     )
 
     def project_col(src: str, agg_context: bool) -> Column:

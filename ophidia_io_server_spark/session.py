@@ -15,12 +15,10 @@ from pyspark.sql import SparkSession
 
 def _default_driver_memory() -> str:
     """``min(24g, half the physical memory)``: a heap the JVM may grow past
-    the host's memory gets the driver OOM-killed instead of collected."""
-    try:
-        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
-    except (AttributeError, ValueError, OSError):  # no sysconf (non-POSIX)
-        return "24g"
-    return "24g" if half_mb >= 24 * 1024 else f"{half_mb}m"
+    the host's memory gets the driver OOM-killed instead of collected.  The
+    physical memory is the host's; a container's cgroup limit is not read."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(half_mb, 24 * 1024)}m"
 
 
 def get_spark(
@@ -46,7 +44,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffledHashJoinFactor", "3")
         # reference C semantics: double division by zero → inf/NaN (no error),

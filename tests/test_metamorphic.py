@@ -24,17 +24,12 @@ SCHEMA = StructType([
 ])
 
 
-def run1(spark, arr, *srcs):
-    """Evaluate each expression over a one-row fragment holding ``arr``, all
-    in one Spark job: the value for one expression, else a tuple in order."""
+def run1(spark, arr, src):
     df = spark.createDataFrame([(1, [float(x) for x in arr])], SCHEMA)
     ctx = ExprContext(resolver=lambda n: df[n])
-    cols = []
-    for i, src in enumerate(srcs):
-        ev = compile_expression(src, ctx)
-        cols.append((ev.numeric() if ev.boolean else ev.col).alias(f"r{i}"))
-    row = df.select(*cols).collect()[0]
-    return row[0] if len(srcs) == 1 else tuple(row)
+    ev = compile_expression(src, ctx)
+    col = ev.numeric() if ev.boolean else ev.col
+    return df.select(col.alias("r")).collect()[0]["r"]
 
 
 @given(arr=ARR)
@@ -42,14 +37,11 @@ def run1(spark, arr, *srcs):
 def test_reduce_sum_invariant_under_reverse(spark, arr):
     """sum is permutation-invariant: reduce(reverse(x)) == reduce(x) exactly
     is NOT guaranteed for doubles, but max/min/size are."""
-    rev_max, fwd_max, rev_min, fwd_min, rev_size = run1(
-        spark, arr,
-        "oph_reduce(oph_reverse(measure),'max')", "oph_reduce(measure,'max')",
-        "oph_reduce(oph_reverse(measure),'min')", "oph_reduce(measure,'min')",
-        "oph_size_array(oph_reverse(measure))")
-    assert rev_max == fwd_max
-    assert rev_min == fwd_min
-    assert rev_size == len(arr)
+    assert run1(spark, arr, "oph_reduce(oph_reverse(measure),'max')") == \
+        run1(spark, arr, "oph_reduce(measure,'max')")
+    assert run1(spark, arr, "oph_reduce(oph_reverse(measure),'min')") == \
+        run1(spark, arr, "oph_reduce(measure,'min')")
+    assert run1(spark, arr, "oph_size_array(oph_reverse(measure))") == len(arr)
 
 
 @given(arr=ARR)
@@ -62,11 +54,11 @@ def test_accumulate_deaccumulate_roundtrip(spark, arr):
 @given(arr=ARR)
 @settings(max_examples=12, deadline=None)
 def test_reverse_involution_and_rotate_identity(spark, arr):
+    assert run1(spark, arr, "oph_reverse(oph_reverse(measure))") == \
+        pytest.approx([float(x) for x in arr])
     n = len(arr)
-    twice_reversed, rotated = run1(spark, arr, "oph_reverse(oph_reverse(measure))",
-                                   f"oph_rotate(measure,{n})")
-    assert twice_reversed == pytest.approx([float(x) for x in arr])
-    assert rotated == pytest.approx([float(x) for x in arr])
+    assert run1(spark, arr, f"oph_rotate(measure,{n})") == \
+        pytest.approx([float(x) for x in arr])
 
 
 @given(arr=ARR, k=st.integers(1, 5))
@@ -119,10 +111,10 @@ def test_gsl_sort_properties(spark, arr):
 def test_quantile_and_boxplot_permutation_invariant(spark, arr):
     """Sort-based stats ignore input order: reversing the array changes
     nothing in median/boxplot/histogram."""
-    fs = ("oph_gsl_quantile(measure,0.5)", "oph_gsl_boxplot(measure)",
-          "oph_gsl_histogram(measure,3)")
-    got = run1(spark, arr, *fs, *(f.replace("measure", "oph_reverse(measure)") for f in fs))
-    for f, a, b in zip(fs, got[:len(fs)], got[len(fs):]):
+    for f in ("oph_gsl_quantile(measure,0.5)", "oph_gsl_boxplot(measure)",
+              "oph_gsl_histogram(measure,3)"):
+        a = run1(spark, arr, f)
+        b = run1(spark, arr, f.replace("measure", "oph_reverse(measure)"))
         assert a == pytest.approx(b), f
 
 
@@ -137,7 +129,7 @@ ARR2 = st.lists(
 def test_fit_shift_equivariance(spark, arr, k):
     """Shifting y by a constant shifts the intercept, not the slope.
     (n >= 2: a single point has no defined line.)"""
-    base, shifted = run1(spark, arr, "oph_gsl_fit_linear_coeff(measure)",
-                         f"oph_gsl_fit_linear_coeff(oph_sum_scalar(measure,{k}))")
+    base = run1(spark, arr, "oph_gsl_fit_linear_coeff(measure)")
+    shifted = run1(spark, arr, f"oph_gsl_fit_linear_coeff(oph_sum_scalar(measure,{k}))")
     assert shifted[1] == pytest.approx(base[1], rel=1e-6, abs=1e-6)   # slope
     assert shifted[0] == pytest.approx(base[0] + k, rel=1e-6, abs=1e-5)  # intercept

@@ -328,3 +328,18 @@ def test_get_subarray3_multidim(spark):
     ev2 = compile_expression("oph_get_subarray3(measure, '2,3', '1:end', '2')", ctx)
     got2 = df.select(ev2.col.alias("r")).collect()[0]["r"]
     assert got2 == [20.0, 50.0]
+
+
+def test_arrow_flag_marks_the_pandas_udf_primitives():
+    """A row-wise select sorts its input first only when a projected
+    primitive is flagged ``arrow``; every primitive built on a pandas UDF
+    must carry the flag, and no other."""
+    import inspect
+    import re
+
+    from ophidia_io_server_spark.functions import PRIMITIVES
+
+    builds_udf = {n for n, p in PRIMITIVES.items()
+                  if re.search(r"\b\w+_udf\b", inspect.getsource(p.fn))}
+    assert builds_udf == {n for n, p in PRIMITIVES.items() if p.arrow}
+    assert "oph_gsl_fft" in builds_udf

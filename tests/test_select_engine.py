@@ -177,9 +177,13 @@ def _measure(i):
     return np.array([float(i), 0.5 * i, float(-i), float(i % 7)])
 
 
-def _fft(i):
-    spec = np.fft.fft(_measure(i))
+def _fft_of(x):
+    spec = np.fft.fft(x)
     return np.column_stack([spec.real, spec.imag]).ravel()
+
+
+def _fft(i):
+    return _fft_of(_measure(i))
 
 
 @pytest.fixture(scope="module")
@@ -207,19 +211,36 @@ def shuffled_server(spark):
      lambda r: r[0],
      lambda i, v: np.allclose(v, _fft(i))),
     # multi-table FROM, ORDER by a qualified bare column
-    ("from_alias=x|y;field=x.id_dim|oph_reduce(oph_mul_array(x.measure,y.measure),'sum');"
+    ("from_alias=x|y;field=x.id_dim|oph_gsl_fft(oph_mul_array(x.measure,y.measure));"
      "where=x.id_dim=y.id_dim&x.id_dim>=20;order=x.id_dim",
      lambda r: r[0],
-     lambda i, v: np.isclose(v, (_measure(i) ** 2).sum())),
+     lambda i, v: np.allclose(v, _fft_of(_measure(i) ** 2))),
+    # no pandas UDF: sorted after the projection
+    ("field=id_dim|oph_reduce(measure,'sum');where=id_dim>=20;order=id_dim",
+     lambda r: r[0],
+     lambda i, v: np.isclose(v, _measure(i).sum())),
     # ORDER by an expression alias: sorted after the projection
     ("field=id_dim*2|oph_gsl_fft(measure);select_alias=twice|f;where=id_dim>=20;"
      "order=twice",
      lambda r: r[0] // 2,
      lambda i, v: np.allclose(v, _fft(i))),
-], ids=["udf", "multi_table", "expression_alias"])
+], ids=["udf", "multi_table", "reduce", "expression_alias"])
 def test_order_over_shuffled_fragment(shuffled_server, query, want_id, check):
     frm = "shuf_a|shuf_b" if "from_alias" in query else "shuf_a"
     rows = shuffled_server.execute(f"operation=select;from={frm};{query}").collect()
     got = [want_id(r) for r in rows]
     assert got == list(range(20, 201))
     assert all(check(i, r[1]) for i, r in zip(got, rows))
+
+
+@pytest.mark.parametrize("field, sort_first", [
+    ("id_dim|oph_gsl_fft(measure)", True),
+    ("id_dim|oph_reduce(measure,'sum')|oph_size_array(measure)", False),
+])
+def test_only_a_pandas_udf_select_sorts_its_input(shuffled_server, field, sort_first):
+    """The sort moves before the projection only when the projection calls a
+    pandas UDF; otherwise it sorts the projected rows, so a shuffle over an
+    unordered fragment moves those rather than the whole input arrays."""
+    out = shuffled_server.execute(f"operation=select;from=shuf_a;field={field};order=id_dim")
+    root = out._jdf.queryExecution().optimizedPlan().nodeName()
+    assert (root != "Sort") == sort_first
