@@ -65,10 +65,6 @@ def session_key(spark: SparkSession) -> tuple:
     ``applicationId`` alone merges sibling sessions (``spark.newSession()``
     shares the application), and ``id(spark)`` can be reused after GC; the
     JVM ``sessionUUID`` is unique per SparkSession for the app's lifetime.
-    Falls back to applicationId-only where the internal accessor is absent
-    (e.g. Spark Connect)."""
-    app = spark.sparkContext.applicationId
-    try:
-        return (app, spark._jsparkSession.sessionUUID())
-    except Exception:  # noqa: BLE001 — accessor shape varies by deployment
-        return (app,)
+    Needs a classic (py4j) session; on Spark Connect both accessors raise."""
+    return (spark.sparkContext.applicationId,
+            spark._jsparkSession.sessionUUID())

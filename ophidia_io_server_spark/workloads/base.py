@@ -36,7 +36,15 @@ from ophidia_io_server_spark.sources.tables import fragment_cte, lineitem_fragme
 class Workload:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None = None
+    # the DuckDB oracle SQL, or a zero-argument callable that ``oracle``
+    # calls on first read (the suite composites build theirs that way)
+    oracle_src: str | Callable[[], str] | None = None
+
+    @property
+    def oracle(self) -> str | None:
+        if callable(self.oracle_src):
+            self.oracle_src = self.oracle_src()
+        return self.oracle_src
 
 
 WORKLOADS: dict[str, Workload] = {}
@@ -97,22 +105,18 @@ def _ensure_session_defaults(spark: SparkSession) -> None:
 
     Pinned ONCE per session (nothing in the package ever unsets these
     three): the per-call py4j conf round-trips were ~2 ms × every
-    workload invocation across the bench."""
-    from ophidia_io_server_spark.session import session_key
-
+    workload invocation across the bench.  A conf that cannot be set
+    raises: a silently unpinned conf would surface as a wrong result."""
     sk = session_key(spark)
     if sk in _SESSION_DEFAULTS_DONE:
         return
-    _SESSION_DEFAULTS_DONE.add(sk)
     for k, v in (
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.ansi.enabled", "false"),
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
     ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # conf not settable on this build — keep going
+        spark.conf.set(k, v)
+    _SESSION_DEFAULTS_DONE.add(sk)
 
 
 _CERT_MEMO: dict[tuple, object] = {}
@@ -134,8 +138,10 @@ def session_memo(spark: SparkSession, key: tuple, compute):
     return _CERT_MEMO[k]
 
 
-def workload(name: str, oracle: str | None = None, explode: list[str] | None = None):
-    """Register a workload.  ``explode`` lists ArrayType output columns to be
+def workload(name: str, oracle: str | Callable[[], str] | None = None,
+             explode: list[str] | None = None):
+    """Register a workload.  ``oracle`` may be a callable that builds the
+    SQL on first read.  ``explode`` lists ArrayType output columns to be
     posexploded (Spark) / unnest-indexed (oracle) into scalar rows — the
     driver's result canonicalizer cannot hash list cells."""
     if explode and oracle is not None:
@@ -152,7 +158,7 @@ def workload(name: str, oracle: str | None = None, explode: list[str] | None = N
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
         wrapped.__wrapped__ = fn  # introspection: map workload -> module
-        WORKLOADS[name] = Workload(name=name, fn=wrapped, oracle=oracle)
+        WORKLOADS[name] = Workload(name=name, fn=wrapped, oracle_src=oracle)
         return fn
 
     return deco

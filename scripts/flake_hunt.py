@@ -80,13 +80,14 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from ophidia_io_server_spark.session import _default_driver_memory
     from ophidia_io_server_spark.workloads import WORKLOADS
 
     spark = (
         SparkSession.builder.master("local[32]")
         .appName("flake_hunt")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", _default_driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()

@@ -32,12 +32,13 @@ import pickle, sys
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
 from scripts.check_correctness import _normalize
+from ophidia_io_server_spark.session import _default_driver_memory
 from ophidia_io_server_spark.workloads import WORKLOADS
 
 spark = (SparkSession.builder.master("local[16]")
          .appName("jit_probe")
          .config("spark.sql.shuffle.partitions", "32")
-         .config("spark.driver.memory", "24g")
+         .config("spark.driver.memory", _default_driver_memory())
          .config("spark.sql.session.timeZone", "UTC")
          .config("spark.driver.extraJavaOptions", {jvm_opts!r})
          .getOrCreate())

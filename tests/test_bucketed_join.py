@@ -3,8 +3,6 @@ fragments bucketed+sorted on id_dim join with NO shuffle exchange — the
 physical layout that makes the reference's aligned zip-join cost-free on a
 cluster (each bucket pair joins locally)."""
 
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,9 +10,8 @@ from ophidia_io_server_spark.sources.random_import import random_fragment
 
 
 @pytest.fixture(scope="module")
-def bucketed(spark):
-    base = "/tmp/ophidia_bucketed_test"
-    shutil.rmtree(base, ignore_errors=True)
+def bucketed(spark, tmp_path_factory):
+    base = tmp_path_factory.mktemp("bucketed")
     names = []
     for name, seed in (("bfrag_a", 1), ("bfrag_b", 2)):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
@@ -25,7 +22,6 @@ def bucketed(spark):
     yield names
     for name in names:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(base, ignore_errors=True)
 
 
 def test_bucketed_join_has_no_exchange(spark, bucketed):
