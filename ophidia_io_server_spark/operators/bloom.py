@@ -31,6 +31,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ophidia_io_server_spark.sources.tables import local_frame
+
 
 def _positions(key: Column, m_bits: int, k_hashes: int) -> list[Column]:
     return [F.pmod(F.xxhash64(key, F.lit(h)), F.lit(m_bits))
@@ -75,8 +77,8 @@ def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 1 << 20,
     for r in words:
         arr[int(r["w"])] = int(r["bits"])
     spark = keys.sparkSession
-    return spark.createDataFrame([(arr, n_keys)],
-                                 "bloom array<bigint>, n_keys bigint")
+    return local_frame(spark, [(arr, n_keys)],
+                       "bloom array<bigint>, n_keys bigint")
 
 
 def _bit(p: Column) -> Column:

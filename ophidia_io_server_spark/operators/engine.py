@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.internal import InternalFunction
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
@@ -26,6 +26,7 @@ from ophidia_io_server_spark.operators.select import (
     execute_select,
 )
 from ophidia_io_server_spark.sources.random_import import random_fragment
+from ophidia_io_server_spark.sources.tables import local_frame
 
 FRAG_SCHEMA = StructType(
     [StructField(ID_COL, LongType(), False), StructField("measure", ArrayType(DoubleType()), True)]
@@ -90,7 +91,7 @@ class IOServer:
         frag_name = self._frag_name(q)
         if self.catalog.exists(frag_name):
             raise QueryExecError(f"fragment {frag_name!r} exists")
-        empty = self.spark.createDataFrame([], FRAG_SCHEMA)
+        empty = local_frame(self.spark, [], FRAG_SCHEMA)
         self.catalog.put(frag_name, empty, cache=False)
         self._insert_buffers[frag_name] = []
         self._flushed.discard(frag_name)
@@ -132,8 +133,11 @@ class IOServer:
         rows = self._insert_buffers.pop(frag_name, None)
         if rows is None:
             return
-        df = self.spark.createDataFrame(
-            [Row(id_dim=int(r[0]), measure=[float(v) for v in r[1]]) for r in rows],
+        # the buffered rows become one Arrow LocalRelation in the JVM: the
+        # cache fill and later scans start no Python worker
+        df = local_frame(
+            self.spark,
+            [(int(r[0]), [float(v) for v in r[1]]) for r in rows],
             FRAG_SCHEMA,
         )
         self.catalog.put(frag_name, df, cache=True, overwrite=True)
@@ -296,7 +300,8 @@ class IOServer:
             sharded = len(args) > 2 and str(args[2]).lower() in ("1", "yes", "true")
             n = (export_fragment_nc_sharded(frag_df, args[1]) if sharded
                  else export_fragment_nc(frag_df, args[1]))
-            return self.spark.createDataFrame([Row(frag=args[0], written=n)])
+            return local_frame(self.spark, [(args[0], n)],
+                               "frag string, written bigint")
         if fname == "oph_size":
             return self.catalog.get(args[0]).size()
         raise QueryExecError(f"unknown procedure {fname!r}")

@@ -3,6 +3,10 @@ refuse to give you at scale (a bare ``Window.orderBy`` collapses to ONE
 partition; every textbook distributed sort-rank needs the two-phase
 range-partition + offset pattern instead).
 
+The per-partition offsets are summed on the driver from a ≤P-row summary
+and enter the plan as ONE literal array indexed by the partition id
+(``element_at(array(<offsets>), _pid + 1)``): no offsets table, no join.
+
 Used by the Manber-Myers suffix-array construction in
 ``pipeline/dedup.py::suffix_array_ranks``; reusable anywhere a dense
 global rank over arbitrarily many rows is needed.
@@ -10,8 +14,34 @@ global rank over arbitrarily many rows is needed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _pid_offsets(totals, nparts: int, width: int):
+    """Exclusive running sums of per-partition ``totals`` (``(pid, t0, …)``
+    summary rows, ``width`` values each) as ``width`` lists indexed by
+    ``_pid``, plus the grand totals.  A partition with no rows has no
+    summary row; its slot holds the running offset.  Every pid must lie
+    in ``[0, nparts)``: the slot list has exactly ``nparts`` entries."""
+    got = {r[0]: r[1:] for r in totals}
+    stray = sorted(p for p in got if not 0 <= p < nparts)
+    if stray:
+        raise ValueError(f"partition ids {stray} outside [0, {nparts})")
+    offs = [[0] * nparts for _ in range(width)]
+    acc = [0] * width
+    for pid in range(nparts):
+        for i, t in enumerate(got.get(pid, (0,) * width)):
+            offs[i][pid] = acc[i]
+            acc[i] += int(t)
+    return offs, acc
+
+
+def _at_pid(offsets: list[int]) -> Column:
+    """``offsets[_pid]`` as a plan literal.  The array is one SQL literal
+    parsed in the JVM, so building it is one call whatever ``nparts``."""
+    arr = F.expr("array(" + ", ".join(f"{int(o)}L" for o in offsets) + ")")
+    return F.element_at(arr, F.col("_pid") + 1)
 
 
 def global_dense_rank(df: DataFrame, cols: list[str],
@@ -29,8 +59,9 @@ def global_dense_rank(df: DataFrame, cols: list[str],
       2. per-partition dense ranks (window keyed on the partition id) +
          a per-partition distinct-count summary (≤ P rows — bounded by
          the partition COUNT, not the data) collected to the driver; its
-         prefix sums become each partition's rank offset, joined back as
-         a broadcast literal table.
+         prefix sums become each partition's rank offset, added back as
+         one literal array indexed by the partition id (no table, no
+         join).
 
     Deterministic for any input layout; ties (equal ``cols``) share a
     rank, as SQL DENSE_RANK does.
@@ -48,6 +79,9 @@ def global_dense_rank(df: DataFrame, cols: list[str],
     boundaries per execution — two executions can draw different
     boundaries (exchange reuse is plan-identity-dependent, not
     guaranteed), silently desynchronizing partition ids from offsets.
+    The summary and the consumer both read the pinned blocks, so the
+    offsets the driver sums are those of the partition ids the consumer
+    indexes with.
     Measured: without the pin, ranks over a 31-token corpus came back
     with collisions/gaps whenever Catalyst declined to reuse the
     exchange.  Pinning after the window (rather than after the exchange,
@@ -62,9 +96,9 @@ def global_dense_rank(df: DataFrame, cols: list[str],
     a dense rank with a known max), the range partitioner — and the
     SAMPLING PASS that re-executes the whole upstream plan to draw its
     boundaries — is skipped entirely; offsets are then keyed by the
-    bucket value instead of the physical partition id."""
-    spark = df.sparkSession
-    nparts = partitions or spark.sparkContext.defaultParallelism
+    bucket value instead of the physical partition id, so the bucket
+    must lie in ``[0, partitions)`` (``ValueError`` otherwise)."""
+    nparts = partitions or df.sparkSession.sparkContext.defaultParallelism
     if bucket_of is not None:
         keyed = (df.withColumn("_pid", bucket_of(F.col(cols[0]))
                                .cast("int"))
@@ -82,21 +116,12 @@ def global_dense_rank(df: DataFrame, cols: list[str],
     # truncated, both branches read the blocks), one job fewer per call.
     local = keyed.withColumn("_lrank", F.dense_rank().over(w)) \
         .localCheckpoint(eager=False)
-    counts = sorted(
-        (r["_pid"], r["_nd"]) for r in
-        local.groupBy("_pid").agg(F.max("_lrank").alias("_nd")).collect()
-    )
-    off, offs_rows = 0, []
-    for pid, nd in counts:
-        offs_rows.append((pid, off))
-        off += nd
-    max_rank = off
-    offs = spark.createDataFrame(offs_rows or [(0, 0)], "_pid int, _off long")
+    counts = local.groupBy("_pid").agg(F.max("_lrank")).collect()
+    (offs,), (max_rank,) = _pid_offsets(counts, nparts, 1)
     ranked = (
-        local.join(F.broadcast(offs), on="_pid")
-        .withColumn(rank_col,
-                    (F.col("_lrank") + F.col("_off")).cast("bigint"))
-        .drop("_pid", "_lrank", "_off")
+        local.withColumn(rank_col,
+                         (F.col("_lrank") + _at_pid(offs)).cast("bigint"))
+        .drop("_pid", "_lrank")
     )
     return (ranked, max_rank) if return_max else ranked
 
@@ -126,7 +151,8 @@ def global_prefix_sum(df: DataFrame, cols: list[str],
     reason documented there): one range exchange on ``cols``,
     per-partition running sums keyed on the physical partition id, a
     ≤P-row per-partition total summary collected to the driver, prefix
-    sums of THOSE become each partition's offset, joined back broadcast.
+    sums of THOSE become each partition's offset, one literal array per
+    ``val_col`` indexed by the partition id.
 
     ``return_total=True`` additionally returns the GRAND TOTAL of each
     ``val_col`` (one Python int per column, or the bare int when
@@ -143,8 +169,7 @@ def global_prefix_sum(df: DataFrame, cols: list[str],
     cums = [cum_col] if isinstance(cum_col, str) else list(cum_col)
     if len(vals) != len(cums):
         raise ValueError(f"val_col/cum_col arity mismatch: {vals} vs {cums}")
-    spark = df.sparkSession
-    nparts = partitions or spark.sparkContext.defaultParallelism
+    nparts = partitions or df.sparkSession.sparkContext.defaultParallelism
     keyed = (df.repartitionByRange(nparts, *cols)
              .withColumn("_pid", F.spark_partition_id()))
     w = (Window.partitionBy("_pid").orderBy(*cols)
@@ -155,28 +180,14 @@ def global_prefix_sum(df: DataFrame, cols: list[str],
     # lazy checkpoint: materialized by the totals collect below (see the
     # identical note in global_dense_rank) — one job fewer per call.
     local = local.localCheckpoint(eager=False)
-    totals = sorted(
-        (r["_pid"], tuple(r[f"_t{i}"] for i in range(len(vals)))) for r in
-        local.groupBy("_pid").agg(
-            *[F.max(f"_lcum{i}").alias(f"_t{i}")
-              for i in range(len(vals))]).collect())
-    offs_acc = [0] * len(vals)
-    offs_rows = []
-    for pid, ts in totals:
-        offs_rows.append((pid, *offs_acc))
-        offs_acc = [a + int(t) for a, t in zip(offs_acc, ts)]
-    schema = "_pid int, " + ", ".join(f"_off{i} long"
-                                      for i in range(len(vals)))
-    offs = spark.createDataFrame(
-        offs_rows or [tuple([0] * (len(vals) + 1))], schema)
-    out = local.join(F.broadcast(offs), on="_pid")
+    totals = local.groupBy("_pid").agg(
+        *[F.max(f"_lcum{i}") for i in range(len(vals))]).collect()
+    offs, grand = _pid_offsets(totals, nparts, len(vals))
+    out = local
     for i, c in enumerate(cums):
         out = out.withColumn(
-            c, (F.col(f"_lcum{i}") + F.col(f"_off{i}")).cast("bigint"))
-    out = out.drop("_pid",
-                   *[f"_lcum{i}" for i in range(len(vals))],
-                   *[f"_off{i}" for i in range(len(vals))])
+            c, (F.col(f"_lcum{i}") + _at_pid(offs[i])).cast("bigint"))
+    out = out.drop("_pid", *[f"_lcum{i}" for i in range(len(vals))])
     if return_total:
-        totals = offs_acc[0] if isinstance(val_col, str) else offs_acc
-        return out, totals
+        return out, (grand[0] if isinstance(val_col, str) else grand)
     return out

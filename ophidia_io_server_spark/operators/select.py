@@ -44,6 +44,7 @@ from ophidia_io_server_spark.dialect.expression import (
     tokenize,
 )
 from ophidia_io_server_spark.dialect.parser import parse_limit
+from ophidia_io_server_spark.sources.tables import local_frame
 
 ID_COL = "id_dim"
 
@@ -144,7 +145,8 @@ def _pseudo_table(catalog: Catalog, name: str) -> DataFrame:
     if key == "@info_system":
         import pyspark
 
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(pyspark.__version__, spark.sparkContext.defaultParallelism,
               len(catalog.dbs))],
             "spark_version string, parallelism int, n_databases int")
@@ -153,10 +155,9 @@ def _pseudo_table(catalog: Catalog, name: str) -> DataFrame:
             (db, frag, e.device, bool(e.temp), bool(e.cached))
             for db, frags in catalog.dbs.items() for frag, e in frags.items()
         ]
-        return spark.createDataFrame(
-            rows or [("", "", "", False, False)],
-            "db string, frag string, device string, temp boolean, cached boolean",
-        ).where("db <> ''" if not rows else F.lit(True))
+        return local_frame(
+            spark, rows,
+            "db string, frag string, device string, temp boolean, cached boolean")
     raise QueryExecError(f"unknown pseudo-table {name!r}")
 
 

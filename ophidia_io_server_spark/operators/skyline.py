@@ -48,6 +48,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ophidia_io_server_spark.sources.tables import local_frame
+
 
 def skyline_2d(df: DataFrame, x_col: str, y_col: str,
                x_dir: str = "max", y_dir: str = "min",
@@ -98,7 +100,8 @@ def skyline_2d(df: DataFrame, x_col: str, y_col: str,
             else:
                 carry = min(carry, b) if y_dir == "min" else max(carry, b)
     y_type = dict(pts.dtypes)["_besty"]
-    offs = spark.createDataFrame(
+    offs = local_frame(
+        spark,
         [(int(p), c) for p, c in carry_rows] or [(0, None)],
         f"_pid int, _carry {y_type}")
 

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ophidia_io_server_spark.sources.tables import local_frame
+
 
 def _sample_matrix(emb: DataFrame, sample: int, vec_col: str) -> np.ndarray:
     """The deterministic training sample: the first ``sample`` vectors by
@@ -125,8 +127,9 @@ def pq_topk(emb: DataFrame, query_pred, codebooks: np.ndarray, k: int = 5,
     qrows = emb.where(query_pred).select("vec_id", vec_col) \
         .orderBy("vec_id").collect()
     if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank long, approx_dist double")
+        return local_frame(
+            spark, [],
+            "query_id long, neighbor_id long, rank long, approx_dist double")
     qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     Q = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in qrows])
     # exact subspace distance tables: (q, m, ncent)
@@ -177,8 +180,8 @@ def exact_l2_topk(emb: DataFrame, query_pred, k: int = 5,
     qrows = emb.where(query_pred).select("vec_id", vec_col) \
         .orderBy("vec_id").collect()
     if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank long, dist double")
+        return local_frame(
+            spark, [], "query_id long, neighbor_id long, rank long, dist double")
     qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     Q = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in qrows])
     bc = spark.sparkContext.broadcast((qids, Q))
@@ -248,8 +251,9 @@ def ivfpq_topk(emb: DataFrame, query_pred, coarse: np.ndarray,
     qrows = emb.where(query_pred).select("vec_id", vec_col) \
         .orderBy("vec_id").collect()
     if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank long, approx_dist double")
+        return local_frame(
+            spark, [],
+            "query_id long, neighbor_id long, rank long, approx_dist double")
     qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     Q = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in qrows])
     # per query: probed lists + ADC table per probed list

@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ophidia_io_server_spark.sources.tables import local_frame
+
 
 def _priority(id_col) -> F.Column:
     """60-bit uniform integer priority: first 15 hex digits of md5(id)."""
@@ -323,7 +325,8 @@ def tdigest_estimate(digest: DataFrame, keys: list[str],
     # precision F.ceil(q*n) form is off-by-one at boundaries (e.g.
     # double(0.05)*160 = 8.0000000000000004 -> ceil 9), which can pick
     # the neighbor cluster and break the [lo, hi] bracket guarantee.
-    qdf = digest.sparkSession.createDataFrame(
+    qdf = local_frame(
+        digest.sparkSession,
         [(float(q), int(round(q * 1_000_000))) for q in qs],
         "q double, q_ppm bigint")
     target = F.expr("(n * q_ppm + 999999) div 1000000")

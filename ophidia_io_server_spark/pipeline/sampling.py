@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ophidia_io_server_spark.sources.tables import local_frame
+
 # decisions quantize the 64-bit hash into this many buckets; 1e6 gives rate
 # resolution of 1e-6 while staying in exact-int territory
 _BUCKETS = 1_000_000
@@ -244,7 +246,7 @@ def select_token_budget(df: DataFrame, budget: int,
     if thresh is None:  # zero budget or empty input
         return df.withColumn("cum_before", F.lit(0).cast("bigint")).limit(0)
     spark = df.sparkSession
-    off = spark.createDataFrame(offsets, schema="_q double, _off long")
+    off = local_frame(spark, offsets, schema="_q double, _off long")
     w = (Window.partitionBy(q)
          .orderBy(F.col(key_col).asc())
          .rowsBetween(Window.unboundedPreceding, -1))

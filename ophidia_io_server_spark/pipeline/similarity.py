@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ophidia_io_server_spark.sources.tables import spread
+from ophidia_io_server_spark.sources.tables import local_frame, spread
 
 # Measured HOF↔BLAS crossovers (PERF.md r5).  The right dispatch unit is
 # DOT PRODUCTS, not rows: cosine_pairs does ~n²/2 of them, the top-k family
@@ -141,8 +141,9 @@ def cosine_topk(emb: DataFrame, query_pred, k: int = 5,
         if qrows is None:
             qrows = base.filter(query_pred).collect()
         if not qrows:
-            return emb.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long, rank long, cosine double")
+            return local_frame(
+                emb.sparkSession, [],
+                "query_id long, neighbor_id long, rank long, cosine double")
         qids = np.array([r.vec_id for r in qrows], dtype=np.int64)
         qmat = np.array([r.v for r in qrows], dtype=np.float64)
         qn = np.array([r._norm for r in qrows], dtype=np.float64)
@@ -419,7 +420,8 @@ def ivf_ann_topk(emb: DataFrame, query_pred, k: int = 5, nlist: int = 8,
         kernel = _resolve_kernel(kernel, emb)  # validation only (not auto)
 
     def cents_df(cents):
-        return F.broadcast(spark.createDataFrame(
+        return F.broadcast(local_frame(
+            spark,
             [(i + 1, [float(x) for x in c]) for i, c in enumerate(cents)],
             "cluster int, c array<double>",
         ))

@@ -11,9 +11,11 @@ operate on the identical fragment.
 from __future__ import annotations
 
 import os
+from datetime import timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, TimestampType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -63,6 +65,39 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     _TABLE_PLAN_MEMO[key] = (ident, df)
     return df
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A DataFrame over driver-built ``rows`` (tuples in ``schema``'s field
+    order) that lives in the JVM.
+
+    ``createDataFrame(<list>)`` pickles the rows into a Python RDD, so every
+    execution of a plan that scans them starts Python-worker tasks (for a
+    broadcast side, a job of its own).  Here the rows become one Arrow table
+    typed by ``schema``; Spark keeps it as a ``LocalRelation`` below
+    ``spark.sql.execution.arrow.localRelationThreshold`` and as a JVM-side
+    Arrow RDD above it.  Neither starts a Python worker.  The schema
+    (nullability included) and the collected rows are those of
+    ``createDataFrame(rows, schema)``: a naive ``datetime`` is read in the
+    process's local time, as the list path reads it, not in the session
+    time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for col, field, arrow_field in zip(cols, schema.fields, arrow_schema):
+        if isinstance(field.dataType, TimestampType):
+            # pyarrow keeps a datetime's wall time and drops its UTC
+            # offset: hand it UTC values
+            col = [None if v is None else v.astimezone(timezone.utc)
+                   for v in col]
+        arrays.append(pa.array(col, type=arrow_field.type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
 
 
 _SPREAD_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = {}

@@ -26,7 +26,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ophidia_io_server_spark.sources.tables import exact_cents_sum
+from ophidia_io_server_spark.sources.tables import exact_cents_sum, local_frame
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -339,7 +339,7 @@ def streaming_insert_fragment(spark: SparkSession, stream: DataFrame, catalog, f
     if not batches:
         # consistent return type on an all-empty stream: a typed empty
         # fragment with the stream's schema (same fix as minhash_lsh_stream)
-        out = spark.createDataFrame([], stream.schema)
+        out = local_frame(spark, [], stream.schema)
         catalog.put(frag_name, out, cache=True, overwrite=True)
         return catalog.get(frag_name)
     out = batches[0]
@@ -472,9 +472,10 @@ def quantile_sketch_stream(stream_df: DataFrame, keys: list[str],
     key_fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in stream_df.schema.fields if f.name in keys)
-    return spark.createDataFrame(
-        [], f"{key_fields}, n bigint, "
-            "sample array<struct<pr: bigint, id: bigint, v: double>>")
+    return local_frame(
+        spark, [],
+        f"{key_fields}, n bigint, "
+        "sample array<struct<pr: bigint, id: bigint, v: double>>")
 
 
 def minhash_lsh_stream(stream_docs: DataFrame, n: int = 3,
@@ -555,8 +556,9 @@ def minhash_lsh_stream(stream_docs: DataFrame, n: int = 3,
     if not emitted:
         # consistent return type on an all-empty stream (r7 ADVICE: a
         # None here forced every caller to special-case it)
-        return stream_docs.sparkSession.createDataFrame(
-            [], "doc_a bigint, doc_b bigint, jaccard double")
+        return local_frame(
+            stream_docs.sparkSession, [],
+            "doc_a bigint, doc_b bigint, jaccard double")
     out = emitted[0]
     for p in emitted[1:]:
         out = out.unionByName(p)

@@ -15,6 +15,7 @@ from ophidia_io_server_spark.sources.tables import (
     exact_cents_sum,
     lineitem_fragment_cached,
     load_table,
+    local_frame,
 )
 
 from ophidia_io_server_spark.workloads.docs import _redact_oracle_exprs
@@ -5530,7 +5531,7 @@ def determinism_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(N_CELLS)
     ]
     pin_schema = "i bigint, " + ", ".join(f"p_{n} double" for n in names)
-    pins = spark.createDataFrame(pin_rows, schema=pin_schema)
+    pins = local_frame(spark, pin_rows, schema=pin_schema)
     comp = spark.range(N_CELLS).toDF("i").selectExpr(
         "cast(i as bigint) as i",
         *[f"{e} AS {n}" for n, e in CHAINS.items()],

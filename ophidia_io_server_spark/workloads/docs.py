@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ophidia_io_server_spark.session import session_key
-from ophidia_io_server_spark.sources.tables import load_table
+from ophidia_io_server_spark.sources.tables import load_table, local_frame
 
 from ophidia_io_server_spark.workloads.base import workload
 
@@ -474,7 +474,8 @@ def embedding_pca_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     off = cov2 - np.diag(np.diag(cov2))
     decorrelated = bool(np.abs(off).max() < 1e-4)
     whitened_unit_var = bool(np.abs(np.diag(cov2) - 1.0).max() < 1e-4)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(n2), dims_ok, mean_centered, variances_descending,
           decorrelated, whitened_unit_var)],
         "n_vectors long, dims_ok boolean, mean_centered boolean, "

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ophidia_io_server_spark.sources.tables import load_table
+from ophidia_io_server_spark.sources.tables import load_table, local_frame
 from ophidia_io_server_spark.workloads.base import workload
 from ophidia_io_server_spark.workloads.env_pins import SESSION_PINS
 
@@ -137,6 +137,6 @@ def env_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_rows = [(fact, None, live[fact]) for fact in _SPARK_LIVE]
     session_rows.append(("engine:duckdb_version", None,
                          SESSION_PINS["engine:duckdb_version"]))
-    sess = spark.createDataFrame(
-        session_rows, "fact string, val_num bigint, val_str string")
+    sess = local_frame(
+        spark, session_rows, "fact string, val_num bigint, val_str string")
     return num.unionByName(sess)

@@ -14,6 +14,7 @@ from ophidia_io_server_spark.sources.tables import (
     exact_cents_sum,
     lineitem_fragment_cached,
     load_table,
+    local_frame,
 )
 
 from ophidia_io_server_spark.workloads.docs import _EMB_BASE_CTE, _SHINGLE_CTE
@@ -1573,7 +1574,8 @@ def ann_pq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = exact.count()
     recall_ok = bool(total > 0 and hits / total >= 0.2)
     pq.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(n), codes_ok, ranks_ok, recall_ok)],
         "n_vectors long, codes_ok boolean, ranks_ok boolean, recall_ok boolean")
 
@@ -1733,7 +1735,8 @@ def ann_ivfpq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact.select("query_id", "neighbor_id")).count()
     recall_ok = bool(hits / (nq * 5) >= 0.25)
     res.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(n), ranks_ok, results_complete, recall_ok)],
         "n_vectors long, ranks_ok boolean, results_complete boolean, "
         "recall_ok boolean")

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ophidia_io_server_spark.session import session_key
-from ophidia_io_server_spark.sources.tables import load_table
+from ophidia_io_server_spark.sources.tables import load_table, local_frame
 
 from ophidia_io_server_spark.workloads.docs import _JACCARD_ORACLE
 from ophidia_io_server_spark.workloads.streaming import _staged_events_dir
@@ -575,7 +575,8 @@ def doc_suffix_array_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     order_ok = bool(
         reps.join(nxt, on="rank").where(violated).count() == 0)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(n_positions), dense_ok, order_ok, shared_rank_ok)],
         "n_positions long, dense_ok boolean, order_ok boolean, "
         "shared_rank_ok boolean")
@@ -694,7 +695,8 @@ def ann_opq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_raw.select("query_id", "neighbor_id")).count()
     total = exact_raw.count()
     recall_ok = bool(total > 0 and hits / total >= 0.2)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(mse_p["n_vectors"]), rot_ok, l2_ok, recon_ok, recall_ok)],
         "n_vectors long, rotation_orthogonal_ok boolean, "
         "l2_topk_set_invariant_ok boolean, recon_not_worse_ok boolean, "

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ophidia_io_server_spark.operators.engine import IOServer
-from ophidia_io_server_spark.sources.tables import exact_cents_sum, load_table
+from ophidia_io_server_spark.sources.tables import exact_cents_sum, load_table, local_frame
 
 from ophidia_io_server_spark.workloads.base import _corpus_tag, session_memo, workload
 
@@ -94,7 +94,8 @@ def _staged_events_outer_dir(spark: SparkSession, sf_dir: str) -> str:
         # nothing), can never join (no real events share their users), and
         # the sentinel purchase's own NULL row is dropped by the
         # workload's user_id >= 0 filter.
-        sent = spark.createDataFrame(
+        sent = local_frame(
+            spark,
             [(10 ** 15 + 2 * i, mx + timedelta(days=days), -1, "view",
               0.0, None),
              (10 ** 15 + 2 * i + 1, mx + timedelta(days=days), -2,

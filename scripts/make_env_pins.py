@@ -18,8 +18,10 @@ regenerating in a gate environment would blind the fingerprint.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
@@ -65,7 +67,7 @@ def main() -> None:
         out.append(f"    {k!r}: {v!r},")
     out.append("}")
     out.append("")
-    path = "/root/repo/ophidia_io_server_spark/workloads/env_pins.py"
+    path = ROOT / "ophidia_io_server_spark" / "workloads" / "env_pins.py"
     with open(path, "w") as f:
         f.write("\n".join(out))
     print(f"wrote {path}:")

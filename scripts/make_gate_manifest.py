@@ -11,8 +11,10 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 # mechanism annotations for the diagnostic rows (everything else is a
 # plain operator/suite row)
@@ -69,7 +71,7 @@ def main() -> None:
             row["mechanism_group"] = _MECHANISM[name]
         rows.append(row)
     manifest = {"gate_rows": rows, "notes": _NOTES}
-    with open("/root/repo/GATE_MANIFEST.json", "w") as f:
+    with open(ROOT / "GATE_MANIFEST.json", "w") as f:
         json.dump(manifest, f, indent=1)
         f.write("\n")
     print(f"wrote GATE_MANIFEST.json: {len(rows)} rows, "
