@@ -141,25 +141,40 @@ class Catalog:
 
     # -- persistence --------------------------------------------------------
     # ≙ reference MetaDB schema-file persistence so the server survives a
-    # restart (oph_metadb_auxiliary.c:353-600).  Here: each non-temp fragment
-    # is written as parquet under <root>/<db>/<frag>/ and the directory layout
-    # IS the schema file — no extra metadata format to version.
+    # restart (oph_metadb_auxiliary.c:353-600).  Here: each call writes a
+    # complete snapshot, every non-temp fragment as parquet under
+    # <root>/v<N>/<db>/<frag>/, and then publishes it by atomically
+    # replacing <root>/LATEST.  The directory layout IS the schema file — no
+    # extra metadata format to version — and a restore sees either the
+    # previous or the new snapshot, never a half-written tree (a crash or a
+    # failed write leaves LATEST on the previous one).  Snapshots are
+    # append-only (object-store-friendly, ≙ a minimal Delta-style commit
+    # protocol without log compaction); old versions are never deleted, so
+    # ``restore`` can also read an older one.
 
     def persist(self, root: str, id_files: int | None = None) -> list[str]:
-        """Write every non-temp fragment to a sibling temp directory and
-        swap it in for ``root`` only after the last write, so a failed
-        write leaves the previous snapshot intact."""
+        """Write and publish a new snapshot; returns the saved
+        ``db.frag`` names."""
+        return self._publish(root, id_files)[1]
+
+    def persist_versioned(self, root: str, id_files: int | None = None) -> int:
+        """``persist``, returning the published version number."""
+        return self._publish(root, id_files)[0]
+
+    def _publish(self, root: str, id_files: int | None) -> tuple[int, list[str]]:
         import os
         import shutil
-        import uuid
 
-        from pyspark.sql import functions as F
-
-        root = os.path.normpath(root)
-        tmp = f"{root}.tmp-{uuid.uuid4().hex}"
+        os.makedirs(root, exist_ok=True)
+        existing = [int(d[1:]) for d in os.listdir(root)
+                    if d.startswith("v") and d[1:].isdigit()]
+        version = max(existing, default=0) + 1
+        snap = f"{root}/v{version}"
         saved = []
         try:
             for db, frags in self.dbs.items():
+                # empty databases must survive a restart too
+                os.makedirs(f"{snap}/{db}", exist_ok=True)
                 for frag, entry in frags.items():
                     if entry.temp:
                         continue
@@ -172,44 +187,27 @@ class Catalog:
                         n = id_files or df.sparkSession.sparkContext.defaultParallelism
                         df = df.repartitionByRange(n, F.col("id_dim").asc()) \
                                .sortWithinPartitions("id_dim")
-                    df.write.mode("overwrite").parquet(f"{tmp}/{db}/{frag}")
+                    df.write.parquet(f"{snap}/{db}/{frag}")
                     saved.append(f"{db}.{frag}")
-            # record empty databases too (they must survive restart)
-            for db in self.dbs:
-                os.makedirs(f"{tmp}/{db}", exist_ok=True)
         except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
+            shutil.rmtree(snap, ignore_errors=True)
             raise
-        old = f"{root}.old-{uuid.uuid4().hex}"
-        if os.path.exists(root):
-            os.replace(root, old)
-        os.replace(tmp, root)
-        shutil.rmtree(old, ignore_errors=True)
-        return saved
-
-    def persist_versioned(self, root: str, id_files: int | None = None) -> int:
-        """Append-only snapshot persistence: each call writes a complete new
-        snapshot under ``root/v<N>/`` and then atomically publishes it by
-        writing ``root/LATEST``.  Readers restoring concurrently see either
-        the previous or the new snapshot, never a half-written tree —
-        object-store-friendly (no in-place mutation), ≙ a minimal
-        Delta-style commit protocol without the log compaction."""
-        import os
-
-        os.makedirs(root, exist_ok=True)
-        existing = [int(d[1:]) for d in os.listdir(root)
-                    if d.startswith("v") and d[1:].isdigit()]
-        version = max(existing, default=0) + 1
-        self.persist(f"{root}/v{version}", id_files=id_files)
-        tmp = f"{root}/.LATEST.tmp"
+        tmp = f"{root}/.LATEST.tmp-{version}"
         with open(tmp, "w") as f:
             f.write(str(version))
         os.replace(tmp, f"{root}/LATEST")  # atomic publish
-        return version
+        return version, saved
 
     @classmethod
     def restore_versioned(cls, spark: SparkSession, root: str,
                           version: int | None = None, cache: bool = True) -> "Catalog":
+        return cls.restore(spark, root, cache=cache, version=version)
+
+    @classmethod
+    def restore(cls, spark: SparkSession, root: str, cache: bool = True,
+                version: int | None = None) -> "Catalog":
+        """The catalog of snapshot ``version`` under ``root``; by default
+        the published one (``LATEST``)."""
         import os
 
         if version is None:
@@ -217,20 +215,13 @@ class Catalog:
                 with open(f"{root}/LATEST") as f:
                     version = int(f.read().strip())
             except FileNotFoundError as e:
-                raise CatalogError(f"no published snapshot at {root!r}") from e
-        if not os.path.isdir(f"{root}/v{version}"):
+                raise CatalogError(f"no persisted catalog at {root!r}") from e
+        snap = f"{root}/v{version}"
+        if not os.path.isdir(snap):
             raise CatalogError(f"snapshot v{version} not found at {root!r}")
-        return cls.restore(spark, f"{root}/v{version}", cache=cache)
-
-    @classmethod
-    def restore(cls, spark: SparkSession, root: str, cache: bool = True) -> "Catalog":
-        import os
-
         cat = cls(spark)
-        if not os.path.isdir(root):
-            raise CatalogError(f"no persisted catalog at {root!r}")
-        for db in sorted(os.listdir(root)):
-            dbdir = os.path.join(root, db)
+        for db in sorted(os.listdir(snap)):
+            dbdir = os.path.join(snap, db)
             if not os.path.isdir(dbdir):
                 continue
             if db not in cat.dbs:

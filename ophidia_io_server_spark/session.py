@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_memory() -> str:
@@ -60,7 +60,7 @@ def get_spark(
 
 
 def session_key(spark: SparkSession) -> tuple:
-    """Stable identity tuple for per-session caches/memos.
+    """Stable identity tuple for the per-session store (``session_memo``).
 
     ``applicationId`` alone merges sibling sessions (``spark.newSession()``
     shares the application), and ``id(spark)`` can be reused after GC; the
@@ -68,3 +68,39 @@ def session_key(spark: SparkSession) -> tuple:
     Needs a classic (py4j) session; on Spark Connect both accessors raise."""
     return (spark.sparkContext.applicationId,
             spark._jsparkSession.sessionUUID())
+
+
+# applicationId -> {(sessionUUID, *key): (ident, value)}; only the active
+# application's entries are kept
+_MEMO: dict[str, dict[tuple, tuple]] = {}
+
+
+def session_memo(spark: SparkSession, key: tuple, build, ident=None):
+    """The one per-session store: ``build()``'s value for ``key`` in this
+    session, built once and served while the caller's ``ident`` (the
+    identity of the value's source, e.g. ``sources.tables.table_ident``)
+    equals the stored one.
+
+    On a changed ``ident`` the superseded value is released first (a
+    DataFrame is unpersisted: a cached plan over the same path would
+    otherwise also answer for the new plan, whose plan compares equal) and
+    ``build()``'s new value replaces it.  Entries of an application that is
+    no longer the active one are dropped: a process has one active
+    SparkContext, so their DataFrames are dead.  ``build`` must be a pure
+    function of the session and the source identified by ``ident``."""
+    app, uuid = session_key(spark)
+    entries = _MEMO.get(app)
+    if entries is None:
+        _MEMO.clear()
+        entries = _MEMO[app] = {}
+    k = (uuid, *key)
+    got = entries.get(k)
+    if got is not None:
+        if got[0] == ident:
+            return got[1]
+        del entries[k]
+        if isinstance(got[1], DataFrame):
+            got[1].unpersist()
+    value = build()
+    entries[k] = (ident, value)
+    return value

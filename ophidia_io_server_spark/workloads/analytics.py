@@ -19,7 +19,13 @@ from ophidia_io_server_spark.sources.tables import (
 )
 
 from ophidia_io_server_spark.workloads.docs import _redact_oracle_exprs
-from ophidia_io_server_spark.workloads.base import WORKLOADS, _FRAG_QTY_CTE, _corpus_tag, workload
+from ophidia_io_server_spark.workloads.base import (
+    WORKLOADS,
+    _FRAG_QTY_CTE,
+    staged_dir,
+    staged_docs_twice,
+    workload,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -519,15 +525,10 @@ def stream_curation_recipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ophidia_io_server_spark.pipeline.recipe import curate_stream
     from ophidia_io_server_spark.streaming.ingest import run_available_now
 
-    tag = _corpus_tag(sf_dir, "documents")
-    path = f"/tmp/ophidia_stream_docs_{tag}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        docs.unionAll(docs).write.mode("overwrite").parquet(path)
-        open(f"{path}/_SUCCESS", "a").close()
+    path = staged_docs_twice(spark, sf_dir)
     stream = spark.readStream.schema("doc_id long, text string").parquet(path)
     curated = curate_stream(stream).drop("text_redacted")
-    per_doc = run_available_now(curated, f"stream_recipe_{tag}",
+    per_doc = run_available_now(curated, f"recipe_{os.path.basename(path)}",
                                 output_mode="append")
     return per_doc.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -789,21 +790,19 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
     )
 
-    tag = _corpus_tag(sf_dir, "documents", salt="hh")
-    path = f"/tmp/ophidia_stream_toks_{tag}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        from ophidia_io_server_spark.pipeline.text import tokens_col
+    from ophidia_io_server_spark.pipeline.text import tokens_col
 
-        docs = load_table(spark, sf_dir, "documents")
-        (docs.where(F.col("text").isNotNull())
-         .select(F.explode(tokens_col(F.col("text"))).alias("item"))
-         .repartition(6).write.mode("overwrite").parquet(path))
-        open(f"{path}/_SUCCESS", "a").close()
+    path = staged_dir(
+        sf_dir, "documents", "toks",
+        lambda p: (load_table(spark, sf_dir, "documents")
+                   .where(F.col("text").isNotNull())
+                   .select(F.explode(tokens_col(F.col("text"))).alias("item"))
+                   .repartition(6).write.parquet(p)))
     stream = (spark.readStream.schema("item string")
               .option("maxFilesPerTrigger", 1).parquet(path))
     emitted = run_available_now(
         heavy_hitters_stream(stream, "item", k=64, buckets=16),
-        f"stream_hh_{tag}", output_mode="update")
+        f"hh_{os.path.basename(path)}", output_mode="update")
     cand = final_candidates(emitted)
     corpus = spark.read.parquet(path)
     exact = (
@@ -1541,12 +1540,9 @@ def stream_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ophidia_io_server_spark.streaming.ingest import run_available_now
 
     docs = load_table(spark, sf_dir, "documents")
-    tag = _corpus_tag(sf_dir, "documents", salt="mix")
-    path = f"/tmp/ophidia_stream_mix_{tag}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        docs.select("doc_id", "lang").repartition(8).write.mode(
-            "overwrite").parquet(path)
-        open(f"{path}/_SUCCESS", "a").close()
+    path = staged_dir(
+        sf_dir, "documents", "mix",
+        lambda p: docs.select("doc_id", "lang").repartition(8).write.parquet(p))
     plan = source_mixing_plan(docs, 0.7, 0.5, source_col="lang")
     stream = (
         spark.readStream.schema("doc_id long, lang string")
@@ -1554,7 +1550,8 @@ def stream_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mixed = temperature_mix_stream(stream, plan, source_col="lang",
                                    key_col="doc_id", seed=11)
-    landed = run_available_now(mixed, f"stream_mix_{tag}", output_mode="append")
+    landed = run_available_now(mixed, f"mix_{os.path.basename(path)}",
+                               output_mode="append")
     n_stream = landed.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_stream"))
     n_batch = (

@@ -9,8 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ophidia_io_server_spark.session import session_key
-from ophidia_io_server_spark.sources.tables import load_table, local_frame
+from ophidia_io_server_spark.sources.tables import load_table, local_frame, table_ident
 
 from ophidia_io_server_spark.workloads.base import workload
 
@@ -122,7 +121,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return jaccard_pairs_exact(docs, n=3, threshold=0.5,
-                               memo_key=(*session_key(spark), sf_dir))
+                               memo_key=table_ident(sf_dir, "documents"))
 
 
 @workload("dedup_minhash_pairs", oracle=_JACCARD_ORACLE)
@@ -133,7 +132,7 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(docs, n=3, threshold=0.5,
-                             memo_key=(*session_key(spark), sf_dir))
+                             memo_key=table_ident(sf_dir, "documents"))
 
 
 @workload("dedup_simhash_pairs", oracle=_JACCARD_ORACLE)
@@ -144,7 +143,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return simhash_pairs(docs, max_hamming=7, verify_jaccard=0.5,
-                         memo_key=(*session_key(spark), sf_dir))
+                         memo_key=table_ident(sf_dir, "documents"))
 
 
 @workload(
@@ -430,7 +429,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return source_overlap_matrix(
-        docs, n=3, memo_key=(*session_key(spark), sf_dir))
+        docs, n=3, memo_key=table_ident(sf_dir, "documents"))
 
 
 @workload(

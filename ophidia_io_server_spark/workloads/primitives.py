@@ -9,20 +9,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ophidia_io_server_spark.session import session_key
 from ophidia_io_server_spark.sources.tables import (
     exact_cents_sum,
     lineitem_fragment_cached,
     load_table,
     local_frame,
+    table_ident,
 )
 
 from ophidia_io_server_spark.workloads.docs import _EMB_BASE_CTE, _SHINGLE_CTE
 from ophidia_io_server_spark.workloads.base import (
     _FRAG_BOTH_CTE,
     _FRAG_QTY_CTE,
-    _corpus_tag,
     _server,
+    staged_docs_twice,
     workload,
 )
 
@@ -1347,7 +1347,7 @@ def curation_split_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, n=3, threshold=0.5,
-                              memo_key=(*session_key(spark), sf_dir))
+                              memo_key=table_ident(sf_dir, "documents"))
     resolved = resolve_duplicates(docs, pairs).select(
         "doc_id", "cluster_id", "cluster_size", "is_canonical")
 
@@ -1613,12 +1613,7 @@ def stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ophidia_io_server_spark.pipeline.text import token_count_col
     from ophidia_io_server_spark.streaming.ingest import run_available_now
 
-    tag = _corpus_tag(sf_dir, "documents")
-    path = f"/tmp/ophidia_stream_docs_{tag}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        docs.unionAll(docs).write.mode("overwrite").parquet(path)
-        open(f"{path}/_SUCCESS", "a").close()
+    path = staged_docs_twice(spark, sf_dir)
     schema = "doc_id long, text string"
     stream = (
         spark.readStream.schema(schema).parquet(path)
@@ -1629,7 +1624,7 @@ def stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             token_count_col(F.col("text")).alias("n_tokens"),
         )
     )
-    per_doc = run_available_now(stream, f"stream_curation_{tag}",
+    per_doc = run_available_now(stream, f"curation_{os.path.basename(path)}",
                                 output_mode="append")
     return per_doc.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -9,12 +9,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ophidia_io_server_spark.session import session_key
-from ophidia_io_server_spark.sources.tables import load_table, local_frame
+from ophidia_io_server_spark.session import session_memo
+from ophidia_io_server_spark.sources.tables import load_table, local_frame, table_ident
 
 from ophidia_io_server_spark.workloads.docs import _JACCARD_ORACLE
 from ophidia_io_server_spark.workloads.streaming import _staged_events_dir
-from ophidia_io_server_spark.workloads.base import _corpus_tag, session_memo, workload
+from ophidia_io_server_spark.workloads.base import same_rows, staged_dir, workload
 
 
 # --- round-6 TPC-H additions.  The synthetic tables are trimmed TPC-H (no
@@ -319,7 +319,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs_incremental(
         docs.where(F.col("doc_id") % 2 == 0),
         docs.where(F.col("doc_id") % 2 == 1),
-        memo_key=(*session_key(spark), sf_dir),
+        memo_key=table_ident(sf_dir, "documents"),
     )
 
 
@@ -468,42 +468,37 @@ def stream_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally pins set-equality with the batch ``minhash_lsh_pairs``
     plan (banding is per-doc deterministic, so pair candidacy is
     batch-arrival invariant)."""
-    import os
-
     from ophidia_io_server_spark.pipeline.dedup import minhash_lsh_pairs
     from ophidia_io_server_spark.streaming.ingest import minhash_lsh_stream
 
     docs = load_table(spark, sf_dir, "documents")
-    tag = _corpus_tag(sf_dir, "documents", salt="mhstream2")
-    path = f"/tmp/ophidia_stream_mh_{tag}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        # 2 files → 2 micro-batches (r14, verdict item 2; was 4): batch 1
-        # exercises the new↔new candidate class, batch 2 the old↔new
-        # state-carry class against batch 1's persisted band index — both
-        # multi-batch classes stay covered while two whole micro-batches
-        # of per-batch machinery leave the drain; pair emission is
-        # batch-arrival invariant (banding is per-doc deterministic), so
-        # the oracle is unaffected — probed bitwise-identical across
-        # 4/2/1-file stagings AND against the one-shot batch plan at
-        # sf0.01 (scripts/r14_stream_batchcount_probe.py)
-        docs.select("doc_id", "text").repartition(2).write.mode(
-            "overwrite").parquet(path)
-        open(f"{path}/_SUCCESS", "a").close()
+    # 2 files → 2 micro-batches (r14, verdict item 2; was 4): batch 1
+    # exercises the new↔new candidate class, batch 2 the old↔new
+    # state-carry class against batch 1's persisted band index — both
+    # multi-batch classes stay covered while two whole micro-batches
+    # of per-batch machinery leave the drain; pair emission is
+    # batch-arrival invariant (banding is per-doc deterministic), so
+    # the oracle is unaffected — probed bitwise-identical across
+    # 4/2/1-file stagings AND against the one-shot batch plan at
+    # sf0.01 (scripts/r14_stream_batchcount_probe.py)
+    path = staged_dir(
+        sf_dir, "documents", "mh",
+        lambda p: docs.select("doc_id", "text").repartition(2).write.parquet(p))
     stream = (spark.readStream.schema("doc_id long, text string")
               .option("maxFilesPerTrigger", 1).parquet(path))
     streamed = minhash_lsh_stream(stream)
 
     def _certify() -> bool:
         batch = minhash_lsh_pairs(docs.select("doc_id", "text"),
-                                  memo_key=(*session_key(spark), sf_dir))
-        return bool(streamed.exceptAll(batch).count() == 0
-                    and batch.exceptAll(streamed).count() == 0)
+                                  memo_key=table_ident(sf_dir, "documents"))
+        return same_rows(streamed, batch)
 
     # the certificate is call-invariant within a session (staged input +
     # deterministic banding), so it is session-memoized: the gate's fresh
     # session computes it honestly once, bench passes stop re-paying the
     # two exceptAll exchanges (r8 verdict #2)
-    eq = session_memo(spark, ("mh_stream_eq", sf_dir), _certify)
+    eq = session_memo(spark, ("mh_stream_eq", sf_dir), _certify,
+                      ident=table_ident(sf_dir, "documents"))
     return streamed.withColumn("stream_equals_batch", F.lit(eq))
 
 
@@ -622,8 +617,7 @@ def sample_bottom_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.repartition(7, "doc_id").orderBy(F.col("doc_id").desc()),
         k, key_col="doc_id", seed=seed, strata_col="lang",
     ).select("lang", "doc_id")
-    layout_ok = bool(sel.exceptAll(sel2).count() == 0
-                     and sel2.exceptAll(sel).count() == 0)
+    layout_ok = same_rows(sel, sel2)
     return per.select(
         "lang", "n_docs", "n_selected",
         (F.col("n_selected") == F.least(F.lit(k).cast("bigint"),
@@ -681,9 +675,7 @@ def ann_opq_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     # actually guaranteed.
     pairs_raw = exact_raw.select("query_id", "neighbor_id")
     pairs_rot = exact_rot.select("query_id", "neighbor_id")
-    l2_ok = bool(
-        pairs_raw.exceptAll(pairs_rot).count() == 0
-        and pairs_rot.exceptAll(pairs_raw).count() == 0)
+    l2_ok = same_rows(pairs_raw, pairs_rot)
 
     pbooks = train_pq(emb, m=16, ncent=16, sample=4096, iters=10)
     mse_p = pq_reconstruction_error(emb, pbooks).collect()[0]
@@ -786,7 +778,7 @@ def doc_varlen_sa_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memo_key shares ONE suffix-array per-position table with
     # doc_varlen_cut (r7 verdict #1: it was built twice per gate/bench run)
     return longest_match_report_sa(
-        docs, min_len=8, memo_key=(*session_key(spark), sf_dir))
+        docs, min_len=8, memo_key=table_ident(sf_dir, "documents"))
 
 
 @workload(
@@ -842,7 +834,7 @@ def doc_varlen_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same memo key as doc_varlen_sa_report: sa_position_lengths filters
     # NULL/empty internally, so the shared table is identical either way
     return remove_duplicate_spans_varlen(
-        docs, min_len=8, memo_key=(*session_key(spark), sf_dir))
+        docs, min_len=8, memo_key=table_ident(sf_dir, "documents"))
 
 
 @workload(
@@ -1626,12 +1618,12 @@ def stream_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, sf_dir, "events")
             .where(F.col("value").isNotNull() & ~F.isnan("value")),
             ["event_type"], "value", "event_id", k=32)
-        return bool(streamed.exceptAll(batch).count() == 0
-                    and batch.exceptAll(streamed).count() == 0)
+        return same_rows(streamed, batch)
 
     # bitwise certificate is call-invariant per session (exact
     # coordination theorem) — memoized, gate computes it fresh
-    eq = session_memo(spark, ("qsk_stream_eq", sf_dir), _certify)
+    eq = session_memo(spark, ("qsk_stream_eq", sf_dir), _certify,
+                      ident=table_ident(sf_dir, "events"))
     return (sketch_quantiles(streamed, [0.5, 0.9])
             .select("event_type", "n", "est_p50", "est_p90")
             .withColumn("stream_equals_batch", F.lit(eq)))
@@ -1691,10 +1683,8 @@ def stream_view_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     got = landed.select("p_event_id", "v_event_id", "user_id", "p_ts", "v_ts")
     # call-invariant per session (memoized staged input, deterministic
     # single-batch drain) — certificate memoized, gate computes it fresh
-    ok = session_memo(
-        spark, ("sva_eq", sf_dir),
-        lambda: bool(got.exceptAll(batch).count() == 0
-                     and batch.exceptAll(got).count() == 0))
+    ok = session_memo(spark, ("sva_eq", sf_dir), lambda: same_rows(got, batch),
+                      ident=table_ident(sf_dir, "events"))
     return landed.select(
         "p_event_id", "v_event_id", "user_id",
         (F.unix_micros(F.col("p_ts").cast("timestamp"))

@@ -10,9 +10,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ophidia_io_server_spark.operators.engine import IOServer
-from ophidia_io_server_spark.sources.tables import exact_cents_sum, load_table, local_frame
+from ophidia_io_server_spark.sources.tables import (
+    exact_cents_sum,
+    load_table,
+    local_frame,
+    table_ident,
+)
 
-from ophidia_io_server_spark.workloads.base import _corpus_tag, session_memo, workload
+from ophidia_io_server_spark.session import session_memo
+from ophidia_io_server_spark.workloads.base import same_rows, staged_dir, workload
 
 
 # ---------------------------------------------------------------------------
@@ -23,8 +29,8 @@ from ophidia_io_server_spark.workloads.base import _corpus_tag, session_memo, wo
 def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage events as a multi-file micros-timestamp parquet directory (the
     driver testdata is TIMESTAMP(NANOS), which a file-source stream schema
-    cannot bind).  Keyed on the source parquet's identity
-    (``_corpus_tag``), so a regenerated table is staged again.
+    cannot bind).  Staged by ``staged_dir``, keyed on the source parquet's
+    identity, so a regenerated table is staged again.
 
     TWO files (r14, verdict item 2): the file count sets the data
     micro-batch count for the maxFilesPerTrigger=1 consumers
@@ -40,16 +46,13 @@ def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
     (scripts/r14_stream_batchcount_probe.py).  The single-batch
     consumers (hourly/session/hopping/ohlc/psi) read the whole
     directory in one batch regardless of file count."""
-    import os
-
-    tag = _corpus_tag(sf_dir, "events")
-    # path suffix versions the staging layout: a stale 4-file dir from a
+    # the suffix versions the staging layout: a stale 4-file dir from a
     # previous session must not silently set the batch count
-    path = f"/tmp/ophidia_stream_events_{tag}_f2"
-    marker = f"{path}/_SUCCESS"
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "events").repartition(2).write.mode("overwrite").parquet(path)
-    return path
+    return staged_dir(
+        sf_dir, "events", "events",
+        lambda path: load_table(spark, sf_dir, "events").repartition(2)
+        .write.parquet(path),
+        suffix="_f2")
 
 
 def _staged_events_outer_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -72,45 +75,35 @@ def _staged_events_outer_dir(spark: SparkSession, sf_dir: str) -> str:
     consumer's ``stream_equals_batch`` certificate re-proves the
     eviction fired on every run.  Keyed on the source parquet's identity."""
     import os
-    import time as _time
+    import time
     from datetime import timedelta
 
-    tag = _corpus_tag(sf_dir, "events")
-    # path suffix versions the staging layout (stale 2-sentinel dirs from
-    # a previous session must not add a batch back)
-    path = f"/tmp/ophidia_stream_events_outer_{tag}_s1"
-    marker = f"{path}/_STAGED_OUTER"
-    if os.path.exists(marker):
-        return path
-    ev = load_table(spark, sf_dir, "events")
-    ev.coalesce(1).write.mode("overwrite").parquet(path)
-    mx = ev.agg(F.max("ts")).collect()[0][0]
-    before = set(os.listdir(path))
-    for i, days in enumerate((30,), start=1):
-        # one far-future VIEW and PURCHASE per sentinel batch, on negative
-        # user ids: they pass the event-type filters so they reach the
-        # watermark operators (the global watermark is the MIN across both
-        # sides' nodes — rows filtered before withWatermark advance
-        # nothing), can never join (no real events share their users), and
-        # the sentinel purchase's own NULL row is dropped by the
-        # workload's user_id >= 0 filter.
-        sent = local_frame(
+    def write(path: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        ev.coalesce(1).write.parquet(path)
+        data = set(os.listdir(path))
+        far = ev.agg(F.max("ts")).collect()[0][0] + timedelta(days=30)
+        # one far-future VIEW and PURCHASE on negative user ids: they pass
+        # the event-type filters so they reach the watermark operators (the
+        # global watermark is the MIN across both sides' nodes — rows
+        # filtered before withWatermark advance nothing), can never join
+        # (no real events share their users), and the sentinel purchase's
+        # own NULL row is dropped by the workload's user_id >= 0 filter.
+        local_frame(
             spark,
-            [(10 ** 15 + 2 * i, mx + timedelta(days=days), -1, "view",
-              0.0, None),
-             (10 ** 15 + 2 * i + 1, mx + timedelta(days=days), -2,
-              "purchase", 0.0, None)],
+            [(10 ** 15 + 2, far, -1, "view", 0.0, None),
+             (10 ** 15 + 3, far, -2, "purchase", 0.0, None)],
             "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string")
-        sent.coalesce(1).write.mode("append").parquet(path)
-        now = set(os.listdir(path))
-        for f in now - before:
+            "value double, props string",
+        ).coalesce(1).write.mode("append").parquet(path)
+        later = time.time() + 3600
+        for f in set(os.listdir(path)) - data:
             if f.endswith(".parquet"):
-                os.utime(os.path.join(path, f),
-                         (_time.time() + 3600 * i, _time.time() + 3600 * i))
-        before = now
-    open(marker, "a").close()
-    return path
+                os.utime(os.path.join(path, f), (later, later))
+
+    # the suffix versions the staging layout (stale 2-sentinel dirs from a
+    # previous session must not add a batch back)
+    return staged_dir(sf_dir, "events", "events_outer", write, suffix="_s1")
 
 
 @workload(
@@ -169,10 +162,8 @@ def stream_view_attribution_outer(spark: SparkSession,
            .select("p_event_id", "v_event_id", "user_id", "p_ts", "v_ts"))
     # call-invariant per session (memoized staged input, deterministic
     # drain + eviction pass) — certificate memoized, gate computes fresh
-    eq = session_memo(
-        spark, ("sva_outer_eq", sf_dir),
-        lambda: bool(out.exceptAll(batch).count() == 0
-                     and batch.exceptAll(out).count() == 0))
+    eq = session_memo(spark, ("sva_outer_eq", sf_dir), lambda: same_rows(out, batch),
+                      ident=table_ident(sf_dir, "events"))
     return out.select(
         "p_event_id", "v_event_id", "user_id",
         (F.unix_micros("p_ts") - F.unix_micros("v_ts")).alias("lag_us"),
@@ -227,10 +218,8 @@ def stream_user_closeout(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.max("ts").alias("last_ts")))
     # call-invariant per session (memoized staged input, exactly-once
     # timeout emission) — certificate memoized, gate computes it fresh
-    eq = session_memo(
-        spark, ("closeout_eq", sf_dir),
-        lambda: bool(landed.exceptAll(batch).count() == 0
-                     and batch.exceptAll(landed).count() == 0))
+    eq = session_memo(spark, ("closeout_eq", sf_dir), lambda: same_rows(landed, batch),
+                      ident=table_ident(sf_dir, "events"))
     return landed.withColumn("stream_equals_batch", F.lit(eq))
 
 
@@ -283,8 +272,6 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Merged r3 with stream_to_dialect (full loop: Structured-Streaming ingest
     → catalog fragment via foreachBatch ≙ multi-run insert → dialect select
     over the stored fragment); the two 1-row summaries cross-join into one."""
-    import os
-
     from ophidia_io_server_spark.streaming.ingest import (
         events_stream,
         run_available_now,
@@ -292,16 +279,12 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_insert_fragment,
     )
 
-    tag = _corpus_tag(sf_dir, "events")
-    path = f"/tmp/ophidia_stream_dup_{tag}"
-    # the first (overwrite) write already leaves a _SUCCESS, so the staging
-    # is complete only once the marker written after the append exists
-    marker = f"{path}/_STAGED_DUP"
-    if not os.path.exists(marker):
+    def write(path: str) -> None:
         ev = load_table(spark, sf_dir, "events")
-        ev.repartition(2).write.mode("overwrite").parquet(path)
+        ev.repartition(2).write.parquet(path)
         ev.repartition(3).write.mode("append").parquet(path)
-        open(marker, "a").close()
+
+    path = staged_dir(sf_dir, "events", "dup", write)
     deduped = stateful_dedup_stream(events_stream(spark, path))
     res = run_available_now(deduped, "events_dedup_result", output_mode="append")
     dedup_row = res.agg(
@@ -750,10 +733,10 @@ def stream_tdigest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.round(F.col("value") * 100).cast("bigint")
                      .alias("v")))
         bdig = canonical_tdigest(e, ["event_type"], "v", delta=_TD_D)
-        return bool(sdig.exceptAll(bdig).count() == 0
-                    and bdig.exceptAll(sdig).count() == 0)
+        return same_rows(sdig, bdig)
 
-    eq = session_memo(spark, ("tdigest_stream_eq", sf_dir), _certify)
+    eq = session_memo(spark, ("tdigest_stream_eq", sf_dir), _certify,
+                      ident=table_ident(sf_dir, "events"))
     return sdig.select(
         "event_type", "cluster", "weight",
         F.col("sum_val").alias("sum_cents"),
@@ -846,10 +829,10 @@ def stream_moments_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _certify() -> bool:
         batch = moments(load_table(spark, sf_dir, "events"))
-        return bool(drained.exceptAll(batch).count() == 0
-                    and batch.exceptAll(drained).count() == 0)
+        return same_rows(drained, batch)
 
-    eq = session_memo(spark, ("moments_stream_eq", sf_dir), _certify)
+    eq = session_memo(spark, ("moments_stream_eq", sf_dir), _certify,
+                      ident=table_ident(sf_dir, "events"))
     n, sx, sy = [F.col(c).cast(dec) for c in ("n", "sx", "sy")]
     sxx, syy, sxy = [F.col(c).cast(dec) for c in ("sxx", "syy", "sxy")]
     vx = (n * sxx - sx * sx)
@@ -996,8 +979,6 @@ def stream_funnel_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.coalesce("credit_cents", F.lit(0)).cast("bigint")
                      .alias("credit_cents"),
                      F.col("purchase_ts").isNotNull().alias("converted")))
-    eq = session_memo(
-        spark, ("funnel_eq", sf_dir),
-        lambda: bool(landed.exceptAll(batch).count() == 0
-                     and batch.exceptAll(landed).count() == 0))
+    eq = session_memo(spark, ("funnel_eq", sf_dir), lambda: same_rows(landed, batch),
+                      ident=table_ident(sf_dir, "events"))
     return landed.withColumn("stream_equals_batch", F.lit(eq))

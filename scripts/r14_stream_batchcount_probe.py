@@ -115,10 +115,10 @@ def main():
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     from ophidia_io_server_spark.pipeline.dedup import minhash_lsh_pairs
     from ophidia_io_server_spark.streaming.ingest import minhash_lsh_stream
-    from ophidia_io_server_spark.session import session_key
+    from ophidia_io_server_spark.sources.tables import table_ident
 
     batch = minhash_lsh_pairs(docs,
-                              memo_key=(*session_key(spark), sf_dir))
+                              memo_key=table_ident(sf_dir, "documents"))
     batch_sig = hashlib.md5(repr(_rows_key(batch)).encode()).hexdigest()
     per = {}
     for n in (4, 2, 1):

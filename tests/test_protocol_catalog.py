@@ -123,7 +123,7 @@ def test_persist_layout_enables_id_skipping(spark):
         srv.catalog.put("big", random_fragment(spark, 10000, 4), cache=False)
         srv.catalog.persist(root, id_files=8)
         import glob
-        files = glob.glob(f"{root}/default/big/part-*")
+        files = glob.glob(f"{root}/v1/default/big/part-*")
         assert len(files) == 8  # range-partitioned into id-contiguous files
 
         cat2 = Catalog.restore(spark, root, cache=False)

@@ -378,7 +378,7 @@ def test_event_stagings_follow_a_regenerated_source(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ophidia_io_server_spark.sources import tables
+    from ophidia_io_server_spark import session
     from ophidia_io_server_spark.workloads.streaming import (
         _staged_events_dir,
         _staged_events_outer_dir,
@@ -407,10 +407,11 @@ def test_event_stagings_follow_a_regenerated_source(spark, tmp_path):
     try:
         for n in (3, 5):
             write_events(n)
-            # a new process starts with an empty table-plan memo; the /tmp
+            # a new process starts with an empty session store; the /tmp
             # stagings outlive it
-            for k in [k for k in tables._TABLE_PLAN_MEMO if sf in k]:
-                del tables._TABLE_PLAN_MEMO[k]
+            for entries in session._MEMO.values():
+                for k in [k for k in entries if sf in k]:
+                    del entries[k]
             for stage in (_staged_events_dir, _staged_events_outer_dir):
                 path = stage(spark, sf)
                 staged.append(path)
@@ -461,3 +462,27 @@ def test_one_drain_and_no_facade_imports():
         str(p.relative_to(repo)) for p in repo.rglob("*.py")
         if facade.search(p.read_text()))
     assert importers == ["bench.py"], importers
+
+
+def test_same_rows_is_exceptall_both_ways(spark):
+    """``same_rows`` answers what the two-``exceptAll`` check answers:
+    duplicates count, NULLs and NaNs match themselves, -0.0 matches 0.0,
+    and columns pair up by position, not by name."""
+    from ophidia_io_server_spark.sources.tables import local_frame
+    from ophidia_io_server_spark.workloads.base import same_rows
+
+    nan = float("nan")
+    rows = [(1, 0.5, "a"), (1, 0.5, "a"), (2, nan, None), (None, 0.0, "b")]
+    variants = {
+        "reordered": (rows[::-1], True),
+        "signed_zero": (rows[:3] + [(None, -0.0, "b")], True),
+        "one_duplicate_fewer": (rows[1:], False),
+        "one_row_more": (rows + [(3, 1.0, "c")], False),
+        "null_for_nan": (rows[:2] + [(2, None, None)] + rows[3:], False),
+    }
+    a = local_frame(spark, rows, "k long, x double, s string")
+    for name, (other, want) in variants.items():
+        b = local_frame(spark, other, "k2 long, x2 double, s2 string")
+        both_ways = (a.exceptAll(b).count() == 0
+                     and b.exceptAll(a).count() == 0)
+        assert same_rows(a, b) is both_ways is want, name
